@@ -31,30 +31,31 @@ from pyspark.sql import DataFrame, SparkSession
 from myduckserver_spark.operators.cdc import apply_cdc
 
 # Snapshot writes target this many bytes per output file (guide-class
-# 128 MB-1 GB parquet sizing). Estimated from Catalyst statistics — no
-# extra job — and only ever COALESCES (never shuffles): a small DML
-# result stops minting one near-empty file per upstream partition
-# (32 tiny files per version at test scale), while any write whose
-# estimated bytes exceed the target keeps its full parallelism, so a
-# 100 TB snapshot still writes wide. Catalyst's sizeInBytes is an
+# 128 MB-1 GB parquet sizing). The file count comes from Catalyst
+# statistics of the optimized plan alone: no physical plan is built and
+# nothing runs before the write itself, which plans and executes the
+# query exactly once. The sizing only ever COALESCES (never shuffles;
+# `coalesce` cannot raise the partition count): a small DML result
+# stops minting one near-empty file per upstream partition, while a
+# write whose estimate exceeds the target keeps its full parallelism,
+# so a 100 TB snapshot still writes wide. Catalyst's sizeInBytes is an
 # IN-MEMORY estimate that overstates zstd parquet on disk ~4x
 # (decompressed values + row overhead), so the in-memory target is
 # 4x the on-disk goal: 512 MB of estimate ≈ a 128 MB-class file.
 _TARGET_WRITE_FILE_BYTES = 512 << 20
+# an unknown size estimates as Long.MaxValue; Py4J passes the
+# partition count as a Java int
+_MAX_WRITE_PARTITIONS = (1 << 31) - 1
 
 
 def _sized_for_write(df: DataFrame) -> DataFrame:
     try:
-        # One analyze/optimize pass: reuse the SAME queryExecution for
-        # the stats and the partition count (df.rdd would build a
-        # second plan + a Python-RDD conversion pipeline per write).
-        qe = df._jdf.queryExecution()
-        est = int(qe.optimizedPlan().stats().sizeInBytes())
-        cur = qe.toRdd().getNumPartitions()
+        est = int(df._jdf.queryExecution().optimizedPlan().stats()
+                  .sizeInBytes())
     except Exception:  # noqa: BLE001 — sizing is best-effort, never fatal
         return df
-    want = max(1, min(cur, -(-est // _TARGET_WRITE_FILE_BYTES)))
-    return df.coalesce(want) if want < cur else df
+    want = -(-est // _TARGET_WRITE_FILE_BYTES)
+    return df.coalesce(max(1, min(want, _MAX_WRITE_PARTITIONS)))
 
 
 class ParquetTable:

@@ -509,10 +509,11 @@ def shrink(eng, duck, table: str, pairs: list[tuple[str, str]],
 # ON DUPLICATE KEY batch-vs-rowwise axis. DuckDB cannot oracle MySQL's
 # intra-batch duplicate-key chains (ON CONFLICT is one target, set
 # semantics) — but MySQL DEFINES the batch as the sequential
-# composition of its rows, so the engine's own single-row path (the
-# distributed set-based tier) replayed row-by-row IS the oracle for
-# the batch path (the driver-side sequential tier). Divergence means
-# one of the two tiers is wrong.
+# composition of its rows, so the engine's own single-row statements
+# (no intra-batch chains) replayed row-by-row ARE the oracle for the
+# batch's chain walk. Divergence means the walk is wrong. (Literal
+# batches of both shapes run the driver-resolved tier; its agreement
+# with the join-based tier is tests/test_upsert_driver.py's axis.)
 
 def gen_on_dup_batch(rng: random.Random, table: str,
                      with_unique: bool = False

@@ -688,13 +688,15 @@ class Engine:
         # Temp views pin a concrete snapshot path, so they must be
         # re-registered when a table's pointer moves — but re-reading
         # EVERY table per query is O(tables) Py4J round-trips. Compare
-        # committed versions (cheap local _VERSION reads) and refresh
-        # only what changed.
+        # (database, committed version) per view name (cheap local
+        # _VERSION reads) and refresh only what changed: after a USE,
+        # a name that exists in both databases at the same version
+        # must still re-bind to the current database's table.
         registered = getattr(self, "_registered_versions", {})
-        current: dict[str, int] = {}
+        current: dict[str, tuple[str, int]] = {}
         for name in self.catalog.list_tables():
             t = self.catalog.table(name)
-            v = t.version
+            v = (self.current_db, t.version)
             current[name] = v
             if registered.get(name) != v:
                 try:
@@ -1255,6 +1257,9 @@ class Engine:
 
     @staticmethod
     def _nonnull(cols: list[str]):
+        """Rows with no NULL key part — the rows a null-exempt UNIQUE
+        level enforces. Not `na.drop`: that also drops NaN, which is an
+        ordinary key value (NaN = NaN)."""
         from functools import reduce as _reduce
 
         return _reduce(
@@ -1310,7 +1315,7 @@ class Engine:
         for cols, null_exempt in keys:
             probe = orig.select(*cols)
             if null_exempt:
-                probe = probe.na.drop("any", subset=cols)
+                probe = probe.where(self._nonnull(cols))
                 # NULL-keyed stored rows can't conflict; a plain join
                 # already never matches them
             kept = kept.join(probe.distinct(), cols, "left_anti")
@@ -1341,7 +1346,7 @@ class Engine:
         for cols, null_exempt in keys:
             grp = ordered
             if null_exempt:
-                grp = grp.na.drop("any", subset=cols)
+                grp = grp.where(self._nonnull(cols))
             mx = (
                 grp.groupBy(*cols).agg(F.count(F.lit(1)).alias("__c"))
                 .agg(F.max("__c").alias("__m")).collect()[0]["__m"]
@@ -1358,7 +1363,7 @@ class Engine:
                     # any-NULL incoming rows are exempt from this key:
                     # anti-join with a null-rejecting condition keeps
                     # them (standard join never matches NULLs anyway)
-                    basek = basek.na.drop("any", subset=cols)
+                    basek = basek.where(self._nonnull(cols))
                 fresh = fresh.join(basek, cols, "left_anti")
             t.overwrite(base.unionByName(fresh.select(*base.columns)))
             return
@@ -1371,7 +1376,7 @@ class Engine:
         for i, (cols, null_exempt) in enumerate(keys):
             basek = base.select(*cols).distinct()
             if null_exempt:
-                basek = basek.na.drop("any", subset=cols)
+                basek = basek.where(self._nonnull(cols))
             hit = (
                 probe.join(basek, cols, "left_semi")
                 .select("__ord").withColumn("__hit", F.lit(True))
@@ -1490,7 +1495,7 @@ class Engine:
         any-NULL keys are exempt."""
         cand = df.select(*icols)
         if null_exempt:
-            cand = cand.na.drop("any", subset=icols)
+            cand = cand.where(self._nonnull(icols))
         bad = (
             cand.groupBy(*icols).agg(F.count(F.lit(1)).alias("__c"))
             .where(F.col("__c") > 1).limit(1).collect()
@@ -1498,7 +1503,7 @@ class Engine:
         if not bad:
             basek = t.read().select(*icols)
             if null_exempt:
-                basek = basek.na.drop("any", subset=icols)
+                basek = basek.where(self._nonnull(icols))
             bad = basek.join(cand, icols, "left_semi").limit(1).collect()
         if bad:
             key = "-".join(
@@ -1524,6 +1529,14 @@ class Engine:
                     out.append((iname, icols, True))
         return out
 
+    def _validate_unique(self, table: str, iname: str, cols) -> None:
+        """A UNIQUE key added to a table with rows validates them
+        first, like MySQL and pg (ER_DUP_ENTRY); conflict resolution
+        relies on stored rows being unique on every declared key."""
+        self._enforce_unique_post(
+            self.catalog.table(table).read(), [(iname, list(cols), True)],
+            table)
+
     def _enforce_unique_post(self, post: DataFrame, targets,
                              table: str) -> None:
         """ER_DUP_ENTRY guard for UPDATEs that assign a key column:
@@ -1534,7 +1547,7 @@ class Engine:
         for iname, icols, null_exempt in targets:
             cand = post.select(*icols)
             if null_exempt:
-                cand = cand.na.drop("any", subset=icols)
+                cand = cand.where(self._nonnull(icols))
             bad = (
                 cand.groupBy(*icols).agg(F.count(F.lit(1)).alias("__c"))
                 .where(F.col("__c") > 1).limit(1).collect()
@@ -4215,7 +4228,7 @@ class Engine:
                 dialect=dialect,
             )
             if null_exempt:
-                un = un.na.drop("any", subset=icols)
+                un = un.where(self._nonnull(icols))
             cond = None
             for c in icols:
                 eq = F.col(f"__n{i}_{c}") == F.col(f"u.`{c}`")
@@ -6911,6 +6924,8 @@ class Engine:
             # Declared for SHOW INDEXES parity (reference creates real
             # ART indexes, catalog/table.go; ShowIndexes executor.go:74-83).
             meta = self.table_meta(s.table)
+            if s.unique:
+                self._validate_unique(s.table, s.name, s.columns)
             meta.indexes[s.name] = {"columns": s.columns, "unique": s.unique}
             self._save_meta(s.table, meta)
             return OkResult(info="index recorded (metadata only)")
@@ -7506,6 +7521,8 @@ class Engine:
                 raise ValueError(f"unknown columns for index: {missing}")
             if s.fk["name"] in meta.indexes:
                 raise ValueError(f"index exists: {s.fk['name']}")
+            if s.fk["unique"]:
+                self._validate_unique(s.name, s.fk["name"], s.fk["columns"])
             meta.indexes[s.fk["name"]] = {
                 "columns": s.fk["columns"], "unique": s.fk["unique"],
             }
@@ -7724,13 +7741,8 @@ class Engine:
 
         ai_mixed_last = 0
         ai_next_base = 0  # persisted counter floor after assignment
-        # driver-known column values for a literal VALUES batch: lets
-        # ON DUPLICATE's intra-batch duplicate-key probe run in Python
-        # (0 Spark jobs) instead of a per-level aggregate union. Only
-        # columns whose final value is knowable without executing the
-        # plan are recorded; any driver-opaque rewrite drops the
-        # affected column (or the whole hint) below.
-        local_vals: dict[str, list] | None = None
+        # row count of a literal VALUES batch (None for INSERT…SELECT)
+        literal_rows: int | None = None
         if s.query is not None:
             df = self.sql(s.query, dialect=dialect)
             if s.columns:
@@ -7808,9 +7820,7 @@ class Engine:
                     T.StructField(c, fields[c], True) for c in target
                 ])
             )
-            local_vals = {
-                c: [r[i] for r in pyrows] for i, c in enumerate(target)
-            }
+            literal_rows = len(pyrows)
 
         auto = meta.auto_increment
         if s.query is not None and auto and auto in df.columns:
@@ -7851,17 +7861,6 @@ class Engine:
                     base_schema[col].dataType
                 ),
             )
-            if local_vals is not None:
-                # constant literal per column — driver-knowable; cast
-                # with the same helper the VALUES rows went through
-                try:
-                    dv = self._py_cast(
-                        meta.defaults.get(col), base_schema[col].dataType
-                    )
-                    nrows = len(next(iter(local_vals.values()), []))
-                    local_vals[col] = [dv] * nrows
-                except Exception:
-                    pass  # column stays driver-unknown
 
         # Generated columns always come from their expression, whatever
         # the INSERT provided (reference: TestGeneratedColumns :871).
@@ -7869,8 +7868,6 @@ class Engine:
             df = df.withColumn(
                 col, self._fragment(expr_text).cast(base_schema[col].dataType)
             )
-            if local_vals is not None:
-                local_vals.pop(col, None)  # expression: driver-unknown
 
         # BEFORE INSERT triggers (SET NEW.c = expr): one vectorized
         # withColumn per assignment, after defaults/generated, before
@@ -7888,8 +7885,6 @@ class Engine:
                     df = df.withColumn(
                         col, F.expr(ex).cast(base_schema[col].dataType)
                     )
-                    if local_vals is not None:
-                        local_vals.pop(col, None)  # driver-unknown now
             elif op[0] == "stmt":
                 before_ins_stmts.append((op[1], op[2]))
             else:
@@ -7918,31 +7913,50 @@ class Engine:
                     F.col(f_.name).isNull()
                     | F.col(f_.name).isin(*evals),
                 )
-        if checks:
+        # Driver-known rows of a small literal VALUES batch on a keyed
+        # table: the key probes and the driver-resolved upsert tier run
+        # over them in Python. They come from ONE collect of the batch
+        # plan, so they hold exactly what the plan writes (defaults
+        # cast by Spark, generated columns, BEFORE INSERT SETs) and
+        # never a Python re-derivation of it.
+        local_vals: dict[str, list] | None = None
+        names = list(checks)
+        viol = [(~checks[cn] | checks[cn].isNull()).cast("int")
+                for cn in names]
+        violated: list[str] = []
+        if (literal_rows is not None
+                and literal_rows <= self._LITERAL_BATCH_CAP
+                and s.mode != "ignore"
+                and (meta.primary_key or self._unique_key_list(meta))):
+            # the same job yields every constraint's violation flag
+            rows = df.select(
+                *df.columns,
+                *[v.alias(f"__v{i}") for i, v in enumerate(viol)],
+            ).collect()
+            local_vals = {c: [r[c] for r in rows] for c in df.columns}
+            violated = [cn for i, cn in enumerate(names)
+                        if any(r[f"__v{i}"] for r in rows)]
+        elif checks:
             # ONE violation-flags job for ALL constraints (was one
             # filter+collect job per CHECK/NOT NULL/ENUM constraint);
             # the per-constraint bad-row fetch runs only on the error /
             # IGNORE path.
-            names = list(checks)
             flags = df.agg(*[
-                F.max(
-                    (~checks[cn] | checks[cn].isNull()).cast("int")
-                ).alias(f"__v{i}")
-                for i, cn in enumerate(names)
+                F.max(v).alias(f"__v{i}") for i, v in enumerate(viol)
             ]).collect()[0]
             violated = [
                 cn for i, cn in enumerate(names) if (flags[i] or 0) > 0
             ]
-            for cname in violated:
-                cond = checks[cname]
-                if s.mode == "ignore":
-                    df = df.filter(cond & cond.isNotNull())
-                    local_vals = None  # rows dropped plan-side
-                    continue
-                bad = df.filter(~cond | cond.isNull()).limit(1).collect()
-                raise ValueError(
-                    f"CHECK/NOT NULL constraint '{cname}' violated: {bad[0]}"
-                )
+        for cname in violated:
+            cond = checks[cname]
+            if s.mode == "ignore":
+                df = df.filter(cond & cond.isNotNull())
+                literal_rows = None  # rows dropped plan-side
+                continue
+            bad = df.filter(~cond | cond.isNull()).limit(1).collect()
+            raise ValueError(
+                f"CHECK/NOT NULL constraint '{cname}' violated: {bad[0]}"
+            )
 
         pk = list(meta.primary_key or [])
 
@@ -7973,11 +7987,11 @@ class Engine:
 
         def _lvl_cand(icols, nex):
             cand = df.select(*icols)
-            return cand.na.drop("any", subset=icols) if nex else cand
+            return cand.where(self._nonnull(icols)) if nex else cand
 
         def _lvl_basek(icols, nex):
             basek = t.read().select(*icols)
-            return basek.na.drop("any", subset=icols) if nex else basek
+            return basek.where(self._nonnull(icols)) if nex else basek
 
         def _key_json(src, icols, nex):
             """Canonical per-level key string. Float/double key parts
@@ -8016,7 +8030,7 @@ class Engine:
 
         n = None
         probed = False
-        if plevels and local_vals:
+        if plevels and local_vals is not None:
             # literal VALUES batch: the intra-batch multiplicity check
             # runs in Python (0 jobs) and the stored-clash check is ONE
             # filtered scan with pushable literal key predicates (was:
@@ -8027,71 +8041,65 @@ class Engine:
             # NaN, -0.0 with +0.0. Falls back to the distributed probe
             # for non-literal batches, oversize batches, or key types
             # outside the round-trip-exact set.
-            nloc = len(next(iter(local_vals.values())))
-            if nloc <= self._LITERAL_BATCH_CAP and all(
-                    c in local_vals
-                    for _i2, icols2, _x2 in plevels for c in icols2):
-                preds, dups = [], []
-                for _iname2, icols2, nex2 in plevels:
-                    kvs = []
-                    for i in range(nloc):
-                        kv = tuple(local_vals[c][i] for c in icols2)
-                        if nex2 and any(v is None for v in kv):
-                            continue
-                        kvs.append(kv)
-                    seen, bad = set(), None
-                    for kv in kvs:
-                        canon = tuple(
-                            "\x00__nan__"
-                            if isinstance(v, float) and v != v else v
-                            for v in kv)
-                        if canon in seen:
-                            bad = kv
-                            break
-                        seen.add(canon)
-                    dups.append(bad)
-                    p = self._literal_key_pred(
-                        base_schema, icols2, kvs,
-                        null_matches_null=not nex2)
-                    if p is None:
-                        preds = None
+            nloc = literal_rows
+            preds, dups = [], []
+            for _iname2, icols2, nex2 in plevels:
+                kvs = []
+                for i in range(nloc):
+                    kv = tuple(local_vals[c][i] for c in icols2)
+                    if nex2 and any(v is None for v in kv):
+                        continue
+                    kvs.append(kv)
+                seen, bad = set(), None
+                for kv in kvs:
+                    canon = self._canon_key(kv)
+                    if canon in seen:
+                        bad = kv
                         break
-                    preds.append(p)
-                if preds is not None:
-                    probed = True
-                    if probe_pk:
-                        n = nloc
-                    from functools import reduce as _reduce
-                    flags = [0] * len(plevels)
-                    # a level-0 intra dup raises before any clash check
-                    # could — skip the scan in that case
-                    if dups[0] is None:
-                        anyp = _reduce(lambda a, b: a | b, preds)
-                        frow = (
-                            t.read()
-                            .filter(F.coalesce(anyp, F.lit(False)))
-                            .agg(*[
-                                F.max(F.when(p2, 1)).alias(f"__cl{i}")
-                                for i, p2 in enumerate(preds)
-                            ]).collect()[0]
+                    seen.add(canon)
+                dups.append(bad)
+                p = self._literal_key_pred(
+                    base_schema, icols2, kvs,
+                    null_matches_null=not nex2)
+                if p is None:
+                    preds = None
+                    break
+                preds.append(p)
+            if preds is not None:
+                probed = True
+                if probe_pk:
+                    n = nloc
+                from functools import reduce as _reduce
+                flags = [0] * len(plevels)
+                # a level-0 intra dup raises before any clash check
+                # could — skip the scan in that case
+                if dups[0] is None:
+                    anyp = _reduce(lambda a, b: a | b, preds)
+                    frow = (
+                        t.read()
+                        .filter(F.coalesce(anyp, F.lit(False)))
+                        .agg(*[
+                            F.max(F.when(p2, 1)).alias(f"__cl{i}")
+                            for i, p2 in enumerate(preds)
+                        ]).collect()[0]
+                    )
+                    flags = [int(frow[i] or 0)
+                             for i in range(len(plevels))]
+                for li, (iname, icols, nex) in enumerate(plevels):
+                    if dups[li] is not None:
+                        raise DuplicateKeyError(
+                            _dup_key(dict(zip(icols, dups[li])),
+                                     icols),
+                            f"{s.table}.{iname}",
                         )
-                        flags = [int(frow[i] or 0)
-                                 for i in range(len(plevels))]
-                    for li, (iname, icols, nex) in enumerate(plevels):
-                        if dups[li] is not None:
-                            raise DuplicateKeyError(
-                                _dup_key(dict(zip(icols, dups[li])),
-                                         icols),
-                                f"{s.table}.{iname}",
-                            )
-                        if flags[li]:
-                            bad = (
-                                t.read().filter(preds[li])
-                                .select(*icols).limit(1).collect()[0]
-                            )
-                            raise DuplicateKeyError(
-                                _dup_key(bad, icols), f"{s.table}.{iname}"
-                            )
+                    if flags[li]:
+                        bad = (
+                            t.read().filter(preds[li])
+                            .select(*icols).limit(1).collect()[0]
+                        )
+                        raise DuplicateKeyError(
+                            _dup_key(bad, icols), f"{s.table}.{iname}"
+                        )
         if plevels and not probed:
             # ONE probe query for the whole statement: every row fans
             # out to its (level, key) pairs, the stored table's keys are
@@ -8154,8 +8162,7 @@ class Engine:
                     )
         if n is None:
             # literal VALUES batch: the row count is driver-known
-            n = (len(next(iter(local_vals.values())))
-                 if local_vals else df.count())
+            n = literal_rows if literal_rows is not None else df.count()
         if before_ins_stmts:
             avail = [f.name for f in base_schema.fields
                      if f.name in df.columns]
@@ -8210,14 +8217,21 @@ class Engine:
         elif s.mode == "replace" and meta.primary_key:
             # MySQL REPLACE affected-rows: 1 per inserted row + 1 per
             # replaced (deleted) existing row
-            before = t.count()
-            incoming = n
-            self.insert_replace(
-                s.table, df.select(*[f.name for f in base_schema.fields]),
-                meta.primary_key, self._unique_key_list(meta),
-            )
-            replaced = before + incoming - t.count()
-            n = incoming + replaced
+            cols = [f.name for f in base_schema.fields]
+            levels = self._on_dup_levels(meta, cols)
+            if self._driver_resolvable(local_vals, levels, base_schema):
+                n, _, _ = self._upsert_driver(
+                    t, t.read(), df.select(*cols), levels, "replace",
+                    local_vals=local_vals,
+                )
+            else:
+                before = t.count()
+                incoming = n
+                self.insert_replace(
+                    s.table, df.select(*cols), meta.primary_key,
+                    self._unique_key_list(meta),
+                )
+                n = 2 * incoming + before - t.count()
         elif s.mode == "ignore" and meta.primary_key:
             before = t.count()
             incoming = n
@@ -8560,34 +8574,29 @@ class Engine:
         )
 
     @staticmethod
-    def _intra_dup_local(local_vals: dict[str, list], levels) -> bool | None:
+    def _canon_key(kv: tuple) -> tuple:
+        """Python form of SQL key equality for driver-side key sets:
+        NaN groups with NaN (a NaN is unequal to itself and hashes by
+        identity), -0.0 with +0.0 (Python == and hash already agree),
+        NULL with NULL (null-exempt levels skip such keys first)."""
+        return tuple("\x00__nan__" if isinstance(v, float) and v != v
+                     else v for v in kv)
+
+    @classmethod
+    def _intra_dup_local(cls, local_vals: dict[str, list],
+                         levels) -> bool:
         """Intra-batch duplicate-key detection over driver-local VALUES
-        rows — 0 Spark jobs. Returns None (caller falls back to the
-        distributed probe) when any enforced level references a column
-        whose final value is not driver-known. Key equality mirrors the
-        distributed groupBy: NULL groups with NULL (but null-exempt
-        levels skip rows with any NULL key part), NaN groups with NaN,
-        -0.0 equals +0.0 (Python == and hash already treat them so)."""
-        for _iname, icols, _nex in levels:
-            if any(c not in local_vals for c in icols):
-                return None
+        rows — 0 Spark jobs. Key equality mirrors the distributed
+        groupBy: NULL groups with NULL (but null-exempt levels skip
+        rows with any NULL key part), NaN with NaN, -0.0 with +0.0."""
         nrows = len(next(iter(local_vals.values()), []))
         for _iname, icols, nex in levels:
             seen = set()
             for i in range(nrows):
-                key, skip = [], False
-                for c in icols:
-                    v = local_vals[c][i]
-                    if v is None:
-                        if nex:
-                            skip = True
-                            break
-                    elif isinstance(v, float) and v != v:
-                        v = "\x00__nan__"  # NaN groups with NaN
-                    key.append(v)
-                if skip:
+                kv = tuple(local_vals[c][i] for c in icols)
+                if nex and any(v is None for v in kv):
                     continue
-                k = tuple(key)
+                k = cls._canon_key(kv)
                 if k in seen:
                     return True
                 seen.add(k)
@@ -8610,15 +8619,16 @@ class Engine:
         value-changing update, 0 per no-op update.
 
         Two tiers:
-        - set-based (the 100 TB path): batch unique on every enforced
-          key and every stored row matched at most once — level-wise
-          anti-join cascade keeps matching distributed;
-        - sequential (MySQL row-at-a-time parity): intra-batch
-          duplicate keys or a stored row matched by several batch
-          rows make later rows see earlier rows' effects. Resolved
-          driver-side over the batch (capped BEFORE collect), with
-          assignment expressions still evaluated BY SPARK in
-          chain-depth rounds — one local job per round, never per row.
+        - driver-resolved (_upsert_driver): a small literal VALUES
+          batch, and the order-dependent shapes of any batch
+          (intra-batch duplicate keys, several batch rows hitting one
+          stored row, unique-only tables). Rows are walked in statement
+          order against the live state in Python, with assignment
+          expressions evaluated BY SPARK in chain-depth rounds;
+        - set-based (the 100 TB path, INSERT…SELECT and oversize
+          batches): batch unique on every enforced key and every
+          stored row matched at most once — level-wise anti-join
+          cascade keeps matching distributed.
         """
         t = self.catalog.table(name)
         base = t.read()
@@ -8642,7 +8652,7 @@ class Engine:
             for _iname, icols, nex in levels:
                 grp = df
                 if nex:
-                    grp = grp.na.drop("any", subset=icols)
+                    grp = grp.where(self._nonnull(icols))
                 probes.append(
                     grp.groupBy(*icols).agg(F.count(F.lit(1)).alias("__c"))
                     .agg(F.max("__c").alias("__m"))
@@ -8656,7 +8666,8 @@ class Engine:
             )
 
         key_cols = {c for _n, cols, _x in levels for c in cols}
-        if set(assignments) & key_cols:
+        key_assigned = bool(set(assignments) & key_cols)
+        if key_assigned:
             # assigning a key column mid-batch rewrites the conflict
             # target identity; MySQL allows it but documents the
             # result as statement-order-defined. Keep the legacy
@@ -8681,14 +8692,23 @@ class Engine:
                 "duplicate keys (pg rejects a row affected twice): "
                 "split the batch"
             )
+        if not key_assigned and self._driver_resolvable(
+                local_vals, levels, base.schema):
+            # small literal batch: a pushed-down candidate scan, one
+            # local evaluation job and a map-only write — no shuffle
+            # of the stored table
+            return self._upsert_driver(
+                t, base, df, levels, "update", assignments, on_update,
+                want_insert_image, want_update_pairs, upsert_where,
+                local_vals=local_vals,
+            )
         if not intra and pk:
             res = self._on_dup_setbased(
                 t, base, df, levels, assignments, base_cols, on_update,
                 want_insert_image, want_update_pairs, upsert_where,
-                local_vals=local_vals,
             )
             if res is not None:
-                if set(assignments) & key_cols:
+                if key_assigned:
                     self._enforce_unique_post(
                         t.read(),
                         self._unique_targets(meta, set(assignments)),
@@ -8701,16 +8721,27 @@ class Engine:
                 "ON CONFLICT ... DO UPDATE ... WHERE: a stored row is "
                 "matched by more than one batch row (pg rejects this)"
             )
-        return self._on_dup_sequential(
-            t, base, df, levels, assignments, base_cols, on_update,
+        return self._upsert_driver(
+            t, base, df, levels, "update", assignments, on_update,
             want_insert_image, want_update_pairs, local_vals=local_vals,
+        )
+
+    def _driver_resolvable(self, local_vals, levels, schema) -> bool:
+        """A literal VALUES batch the driver-resolved tier takes whole:
+        its rows are driver-known (Spark-evaluated, at most
+        _LITERAL_BATCH_CAP of them) and every key type compares
+        round-trip-exactly as a literal, so the candidate fetch is one
+        pushed-down membership scan."""
+        return local_vals is not None and all(
+            isinstance(schema[c].dataType, self._LITERAL_KEY_TYPES)
+            for _n, icols, _x in levels for c in icols
         )
 
     def _on_dup_setbased(self, t, base, df, levels, assignments,
                          base_cols, on_update=None,
                          want_insert_image=False,
                          want_update_pairs=False,
-                         upsert_where=None, local_vals=None):
+                         upsert_where=None):
         """Distributed ON DUPLICATE KEY UPDATE: level-wise first-match
         cascade (rows that matched an earlier index leave the pool via
         anti-join before the next), one update projection, one write.
@@ -8722,34 +8753,7 @@ class Engine:
         pk = levels[0][1]  # caller guarantees PRIMARY first
         nf = df.select([F.col(c).alias(f"__n_{c}") for c in base_cols])
 
-        # literal VALUES batch: pre-filter the STORED side to rows
-        # whose key matches some batch key on some level — ONE
-        # membership predicate that pushes to the parquet scan, so the
-        # cascade's joins see candidate rows instead of the full table
-        # (guide §3.2: reduce the big side before it reaches the
-        # join). The predicate is a superset of every level's join
-        # matches (round-trip-exact key types only; NaN via isnan),
-        # so join results are unchanged.
-        src = base
-        if local_vals is not None:
-            nbatch = len(next(iter(local_vals.values()), []))
-            if nbatch <= self._LITERAL_BATCH_CAP and all(
-                c in local_vals for _n, icols, _x in levels for c in icols
-            ):
-                preds = []
-                for _iname, icols, _nex in levels:
-                    keys = [tuple(local_vals[c][i] for c in icols)
-                            for i in range(nbatch)]
-                    p = self._literal_key_pred(base.schema, icols, keys)
-                    if p is None:
-                        preds = None
-                        break
-                    preds.append(p)
-                if preds is not None:
-                    anyhit = _reduce(lambda a, b: a | b, preds)
-                    src = base.filter(F.coalesce(anyhit, F.lit(False)))
-
-        bf = src.select([F.col(c).alias(f"__t_{c}") for c in base_cols])
+        bf = base.select([F.col(c).alias(f"__t_{c}") for c in base_cols])
         rem = nf
         parts = []
         for _iname, icols, nex in levels:
@@ -8758,13 +8762,12 @@ class Engine:
                 (F.col(f"__t_{c}") == F.col(f"__n_{c}") for c in icols),
             )
             parts.append(rem.join(bf, cond, "inner"))
-            basek = src.select(
+            basek = base.select(
                 [F.col(c).alias(f"__n_{c}") for c in icols]
             ).distinct()
             if nex:
-                basek = basek.na.drop(
-                    "any", subset=[f"__n_{c}" for c in icols]
-                )
+                basek = basek.where(
+                    self._nonnull([f"__n_{c}" for c in icols]))
             rem = rem.join(basek, [f"__n_{c}" for c in icols], "left_anti")
         matched = parts[0]
         for p in parts[1:]:
@@ -8849,7 +8852,7 @@ class Engine:
         # among matched), PK being non-null — no groupBy needed. If
         # the fused collect throws (an assignment expression erroring
         # on a matched pair), re-run the expression-free part alone so
-        # a multi-hit batch still falls back to the sequential tier
+        # a multi-hit batch still falls back to the driver tier
         # exactly as before instead of surfacing the set-based error.
         pk_t = F.when(
             F.col("__mt"), F.struct(*[F.col(f"__t_{c}") for c in pk])
@@ -8897,21 +8900,34 @@ class Engine:
     # grows linearly with the batch; joins win past this size anyway)
     _LITERAL_BATCH_CAP = 256
 
-    def _on_dup_sequential(self, t, base, df, levels, assignments,
-                           base_cols, on_update=None,
-                           want_insert_image=False,
-                           want_update_pairs=False,
-                           local_vals=None):
-        """MySQL row-at-a-time parity for the order-dependent shapes
-        (intra-batch duplicate keys, several batch rows hitting one
-        stored row, unique-only tables): each batch row conflicts
+    def _upsert_driver(self, t, base, df, levels, policy,
+                       assignments=None, on_update=None,
+                       want_insert_image=False,
+                       want_update_pairs=False, upsert_where=None,
+                       local_vals=None):
+        """Driver-resolved conflict handling with MySQL row-at-a-time
+        semantics: each batch row, in statement order, conflicts
         against the LIVE state — stored rows plus everything the
-        statement already inserted/updated. Matching is walked in
-        Python over key values only; assignment expressions are
-        evaluated BY SPARK in chain-depth rounds (all k-th-occurrence
-        updates of every entity form one local job). Bounded like
-        cursors: the batch is capped BEFORE collect via limit(cap+1);
-        candidate stored rows are ≤ batch×levels by construction."""
+        statement already inserted or updated — on any level. Policy
+        "update" (ON DUPLICATE KEY / ON CONFLICT DO UPDATE): the first
+        matched entity takes the assignments, else the row inserts.
+        Policy "replace" (REPLACE): the row removes every live entity
+        it conflicts with on any key, then inserts itself.
+
+        Matching is walked in Python over key values only; assignment
+        expressions (and the ON CONFLICT … WHERE gate) are evaluated
+        BY SPARK in chain-depth rounds (all k-th updates of every
+        entity form one local job). The write is map-only: stored
+        candidates swap out by the same predicate that fetched them,
+        final entity states union in. Bounded like cursors: the batch
+        is capped BEFORE collect via limit(cap+1); candidate stored
+        rows are ≤ batch×levels by construction.
+
+        Returns (affected, inserted_image, update_pairs)."""
+        from functools import reduce as _reduce
+
+        assignments = assignments or {}
+        base_cols = base.columns
         key_cols = {c for _n, cols, _x in levels for c in cols}
         if set(assignments) & key_cols:
             raise NotImplementedError(
@@ -8920,23 +8936,13 @@ class Engine:
                 "batch"
             )
         cap = self._CHAIN_WALK_CAP
-        batch = None
-        if local_vals is not None and all(c in local_vals for c in base_cols):
-            nrows = len(next(iter(local_vals.values()), []))
-            if nrows <= cap and all(
-                isinstance(base.schema[c].dataType, self._LITERAL_KEY_TYPES)
-                for c in key_cols
-            ):
-                # literal VALUES batch with round-trip-exact key types:
-                # the rows (and their statement order) are driver-known
-                # — skip the collect job. Float32/decimal key columns
-                # fall back (their Python values would not compare
-                # equal to the collected candidates' ingested values).
-                batch = [
-                    {c: local_vals[c][i] for c in base_cols}
-                    for i in range(nrows)
-                ]
-        if batch is None:
+        if local_vals is not None:
+            # Spark-evaluated literal rows, in statement order
+            batch = [
+                {c: local_vals[c][i] for c in base_cols}
+                for i in range(len(local_vals[base_cols[0]]))
+            ]
+        else:
             ordered = df.withColumn(
                 "__ord", F.monotonically_increasing_id())
             batch = ordered.orderBy("__ord").limit(cap + 1).collect()
@@ -8963,70 +8969,85 @@ class Engine:
                     break
                 preds.append(p)
             if preds is not None:
-                from functools import reduce as _reduce
-                anyhit = _reduce(lambda a, b: a | b, preds)
+                anyhit = F.coalesce(
+                    _reduce(lambda a, b: a | b, preds), F.lit(False))
         if anyhit is not None:
-            cand_rows = (
-                base.filter(F.coalesce(anyhit, F.lit(False)))
-                .limit(cap * len(levels) + 1).collect()
-            )
+            cand_rows = base.filter(anyhit).limit(
+                cap * len(levels) + 1).collect()
         else:
             cand = None
             for _iname, icols, nex in levels:
                 keys_df = df.select(*icols).distinct()
                 if nex:
-                    keys_df = keys_df.na.drop("any", subset=icols)
+                    keys_df = keys_df.where(self._nonnull(icols))
                 part = base.join(keys_df, icols, "left_semi")
                 cand = part if cand is None else cand.unionByName(part)
             cand_rows = cand.distinct().limit(
                 cap * len(levels) + 1).collect()
 
         ents: list[dict] = []
+        alive: list[bool] = []
         index: list[dict] = [dict() for _ in levels]
 
-        def register(eid: int, vals: dict) -> None:
+        def level_keys(vals: dict):
+            # (level, canonical key) pairs; null-exempt levels skip
+            # keys with a NULL part
             for i, (_iname, icols, nex) in enumerate(levels):
                 kv = tuple(vals[c] for c in icols)
-                if nex and any(v is None for v in kv):
-                    continue
-                index[i].setdefault(kv, eid)
+                if not (nex and any(v is None for v in kv)):
+                    yield i, self._canon_key(kv)
+
+        def register(vals: dict) -> int:
+            ents.append(vals)
+            alive.append(True)
+            for i, k in level_keys(vals):
+                index[i].setdefault(k, len(ents) - 1)
+            return len(ents) - 1
 
         for r in cand_rows:
-            vals = {c: r[c] for c in base_cols}
-            ents.append(vals)
-            register(len(ents) - 1, vals)
-        n_stored = len(ents)
+            register({c: r[c] for c in base_cols})
 
-        inserts = 0
+        inserts = removed = 0
         inserted_rows: list[tuple] = []  # initial values (MySQL: the
         # AFTER INSERT image is the row as inserted, before any later
         # duplicate in the same batch updates it)
-        pair_rows: list[tuple] = []
         chains: dict[int, list] = {}
         for r in batch:
-            eid = None
-            for i, (_iname, icols, nex) in enumerate(levels):
-                kv = tuple(r[c] for c in icols)
-                if nex and any(v is None for v in kv):
-                    continue
-                eid = index[i].get(kv)
-                if eid is not None:
-                    break
-            if eid is None:
-                vals = {c: r[c] for c in base_cols}
-                ents.append(vals)
-                register(len(ents) - 1, vals)
-                inserts += 1
-                if want_insert_image:
-                    inserted_rows.append(
-                        tuple(vals[c] for c in base_cols))
-            else:
-                chains.setdefault(eid, []).append(r)
+            vals = {c: r[c] for c in base_cols}
+            hits = [index[i].get(k) for i, k in level_keys(vals)]
+            hits = list(dict.fromkeys(e for e in hits if e is not None))
+            if policy == "replace":
+                for eid in hits:
+                    alive[eid] = False
+                    removed += 1
+                    for i, k in level_keys(ents[eid]):
+                        if index[i].get(k) == eid:
+                            del index[i][k]
+            elif hits:
+                chains.setdefault(hits[0], []).append(r)
+                continue
+            register(vals)
+            inserts += 1
+            if want_insert_image:
+                inserted_rows.append(tuple(vals[c] for c in base_cols))
 
         # evaluate updates in chain-depth rounds: Spark computes every
         # k-th update in one local job (arbitrary SQL expressions stay
         # engine-evaluated; the driver only carries values)
+        depth = max((len(v) for v in chains.values()), default=0)
+        if upsert_where is not None and depth > 1:
+            # pg: ON CONFLICT DO UPDATE cannot affect a row twice
+            raise NotImplementedError(
+                "ON CONFLICT ... DO UPDATE ... WHERE: a stored row is "
+                "matched by more than one batch row (pg rejects this)"
+            )
+        gate = None
+        if upsert_where is not None:
+            gate = F.expr(
+                self._on_dup_rewrite(upsert_where, base_cols)
+            ).cast("boolean")
         changed = 0
+        pair_rows: list[tuple] = []
         schema = T.StructType(
             [T.StructField("__eid", T.LongType(), False)]
             + [T.StructField(f"__t_{f.name}", f.dataType, True)
@@ -9034,7 +9055,6 @@ class Engine:
             + [T.StructField(f"__n_{f.name}", f.dataType, True)
                for f in base.schema.fields]
         )
-        depth = max((len(v) for v in chains.values()), default=0)
         for k in range(depth):
             todo = [(eid, rows[k]) for eid, rows in chains.items()
                     if len(rows) > k]
@@ -9051,6 +9071,10 @@ class Engine:
                 newv = F.expr(
                     self._on_dup_rewrite(assignments[c], base_cols)
                 ).cast(base.schema[c].dataType)
+                if gate is not None:
+                    # pg conditional upsert: rows failing the WHERE
+                    # keep their stored values
+                    newv = F.when(gate, newv).otherwise(F.col(f"__t_{c}"))
                 sel.append(newv.alias(c))
                 chg = chg | ~newv.eqNullSafe(F.col(f"__t_{c}"))
             for c in on_update or ():
@@ -9061,8 +9085,7 @@ class Engine:
             res = local.select(*sel, chg.alias("__chg")).collect()
             for rr in res:
                 eid = rr["__eid"]
-                old_vals = tuple(ents[eid][c] for c in base_cols) \
-                    if want_update_pairs else None
+                old_vals = tuple(ents[eid][c] for c in base_cols)
                 for c in assignments:
                     ents[eid][c] = rr[c]
                 if rr["__chg"]:
@@ -9076,49 +9099,43 @@ class Engine:
                         + tuple(ents[eid][c] for c in base_cols)
                     )
 
-        # swap candidates out, final entity states in (the filter /
+        # swap candidates out, live entity states in (the filter /
         # anti-joins mirror candidate selection exactly — keys are
         # static). Using the SAME predicate for fetch and removal
         # guarantees no stored row is dropped without having been
         # collected into ents first.
         if anyhit is not None:
-            kept = base.filter(~F.coalesce(anyhit, F.lit(False)))
+            kept = base.filter(~anyhit)
         else:
             kept = base
             for _iname, icols, nex in levels:
                 keys_df = df.select(*icols).distinct()
                 if nex:
-                    keys_df = keys_df.na.drop("any", subset=icols)
+                    keys_df = keys_df.where(self._nonnull(icols))
                 kept = kept.join(keys_df, icols, "left_anti")
         out_schema = T.StructType(
             [T.StructField(f.name, f.dataType, True)
              for f in base.schema.fields]
         )
-        ents_df = self.spark.createDataFrame(
-            [tuple(e[c] for c in base_cols) for e in ents], out_schema
-        ) if ents else base.limit(0)
-        t.overwrite(kept.select(*base_cols).unionByName(ents_df))
-        ins_img = None
-        if want_insert_image:
-            ins_img = self.spark.createDataFrame(
-                inserted_rows, out_schema
-            ) if inserted_rows else base.limit(0)
+
+        local_df = self.spark.createDataFrame
+        live = [tuple(e[c] for c in base_cols)
+                for e, a in zip(ents, alive) if a]
+        t.overwrite(kept.select(*base_cols).unionByName(
+            local_df(live, out_schema)))
+        ins_img = local_df(inserted_rows, out_schema) \
+            if want_insert_image else None
         upd_pairs = None
         if want_update_pairs:
-            pair_schema = T.StructType(
+            upd_pairs = local_df(pair_rows, T.StructType(
                 [T.StructField(f"old_{f.name}", f.dataType, True)
                  for f in base.schema.fields]
                 + [T.StructField(f"new_{f.name}", f.dataType, True)
                    for f in base.schema.fields]
-            )
-            upd_pairs = self.spark.createDataFrame(
-                pair_rows, pair_schema
-            ) if pair_rows else self.spark.createDataFrame(
-                [], pair_schema)
-        # MySQL affected-rows: 1/insert, 2/changing update, 0/no-op;
-        # n_stored candidates that received no update contribute 0
-        _ = n_stored
-        return inserts + 2 * changed, ins_img, upd_pairs
+            ))
+        # MySQL affected-rows: 1/insert, 1/removed row (REPLACE),
+        # 2/changing update, 0/no-op update
+        return inserts + removed + 2 * changed, ins_img, upd_pairs
 
     def _row_cap_cond(
         self, table: str, cond: Column, order_by: str | None, limit: int

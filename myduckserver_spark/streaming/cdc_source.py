@@ -86,6 +86,11 @@ class FileCdcFeed:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # (segment, lines, bytes) of the newest segment as this writer
+        # last left it: the next position is known without re-reading
+        # the segment. A size change (another writer) or a newer
+        # segment on disk forces a recount.
+        self._tail: tuple[int, int, int] | None = None
 
     def _segments(self) -> list[int]:
         out = []
@@ -108,13 +113,21 @@ class FileCdcFeed:
         table: str | None = None,
     ) -> int:
         """Append one event to the newest segment; returns its position."""
-        segs = self._segments()
-        seg = segs[-1] if segs else 1
+        tail = self._tail
+        if tail is None or os.path.exists(self._seg_path(tail[0] + 1)):
+            segs = self._segments()
+            seg = segs[-1] if segs else 1
+        else:
+            seg = tail[0]
         path = self._seg_path(seg)
-        line_no = 0
-        if os.path.exists(path):
-            with open(path) as f:
-                line_no = sum(1 for _ in f)
+        size = os.path.getsize(path) if os.path.exists(path) else 0
+        if tail is not None and tail[0] == seg and tail[2] == size:
+            line_no = tail[1]
+        else:
+            line_no = 0
+            if size:
+                with open(path) as f:
+                    line_no = sum(1 for _ in f)
         pos = seg * _SEGMENT_STRIDE + line_no + 1
         rec = {
             "action": action,
@@ -127,6 +140,7 @@ class FileCdcFeed:
             rec["table"] = table
         with open(path, "a") as f:
             f.write(json.dumps(rec) + "\n")
+            self._tail = (seg, line_no + 1, f.tell())
         return pos
 
     def rotate(self) -> int:

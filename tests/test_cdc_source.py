@@ -156,6 +156,27 @@ def test_segment_rotation_positions(setup):
     assert (70, 7.0) in _state(table) and (71, 7.1) in _state(table)
 
 
+def test_append_positions_contiguous_across_reopen_and_roll(tmp_path):
+    """append tracks the segment's next line instead of re-counting
+    it per call; positions stay contiguous when a second feed object
+    reopens the segment, when the first writer appends after it, and
+    across a segment roll."""
+    root = str(tmp_path / "feed_pos")
+    a = FileCdcFeed(root)
+    got = [a.append(ACTION_INSERT, {"id": i, "v": 0.0}) for i in range(3)]
+    b = FileCdcFeed(root)  # reopened: counts the segment once
+    got += [b.append(ACTION_INSERT, {"id": i, "v": 0.0}) for i in (3, 4)]
+    got.append(a.append(ACTION_INSERT, {"id": 5, "v": 0.0}))  # stale tail
+    seg = got[0] // 1_000_000
+    assert got == [seg * 1_000_000 + n for n in range(1, 7)]
+    b.rotate()
+    p1 = a.append(ACTION_INSERT, {"id": 6, "v": 0.0})  # other's roll
+    p2 = b.append(ACTION_INSERT, {"id": 7, "v": 0.0})
+    assert (p1, p2) == ((seg + 1) * 1_000_000 + 1, (seg + 1) * 1_000_000 + 2)
+    read = [(e.position, e.row["id"]) for e in a.events_after(0)]
+    assert read == list(zip(got + [p1, p2], range(8)))
+
+
 def test_show_replica_status(spark, tmp_path):
     """SHOW BINLOG/REPLICA STATUS surfaces committed resume positions
     (reference: __sys__.binlog_position, catalog/internal_tables.go:

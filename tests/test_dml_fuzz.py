@@ -62,9 +62,9 @@ def test_dml_generator_is_deterministic():
 
 def test_on_dup_batch_vs_rowwise(eng):
     """MySQL defines a multi-row ON DUPLICATE batch as the sequential
-    composition of its rows: the engine's single-row (set-based) path
-    replayed row-by-row oracles the batch (sequential-tier) path —
-    state AND summed affected-rows must agree."""
+    composition of its rows: the engine's single-row statements
+    replayed row-by-row oracle the batch's chain walk — state AND
+    summed affected-rows must agree."""
     rng = random.Random(SEED + 1)
     failures = []
     for trial in range(10):

@@ -155,6 +155,22 @@ def test_set_show_variables_use_db(engine):
         engine.execute("USE analytics")
 
 
+def test_use_rebinds_same_name_same_version(engine):
+    # `t` exists in both databases at the same version; after switching
+    # away and back, the name must read the current database's table
+    engine.execute("CREATE TABLE t (id INT, src VARCHAR(8))")
+    engine.execute("INSERT INTO t VALUES (1, 'main')")
+    engine.execute("CREATE DATABASE other")
+    engine.execute("USE other")
+    engine.execute("CREATE TABLE t (id INT, src VARCHAR(8))")
+    engine.execute("INSERT INTO t VALUES (2, 'other')")
+    assert [tuple(r) for r in engine.execute(
+        "SELECT * FROM t").collect()] == [(2, "other")]
+    engine.execute("USE main")
+    assert [tuple(r) for r in engine.execute(
+        "SELECT * FROM t").collect()] == [(1, "main")]
+
+
 def test_transactions_rollback_and_commit(engine):
     engine.execute("INSERT INTO users (name) VALUES ('keep')")
 
