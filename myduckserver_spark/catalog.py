@@ -28,6 +28,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from myduckserver_spark.frames import local_frame
 from myduckserver_spark.operators.cdc import apply_cdc
 
 # Snapshot writes target this many bytes per output file (guide-class
@@ -173,7 +174,7 @@ class ParquetTable:
                 or "path does not exist" in msg.lower()
                 or "unable_to_infer_schema" in msg.upper()
             ):
-                return self.spark.createDataFrame([], schema)
+                return local_frame(self.spark, [], schema)
             raise
 
     def count(self) -> int:

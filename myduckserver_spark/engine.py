@@ -29,6 +29,7 @@ from pyspark.sql.types import StructType
 
 from myduckserver_spark import statements as st
 from myduckserver_spark.catalog import Catalog, ParquetTable
+from myduckserver_spark.frames import local_frame
 from myduckserver_spark.functions.mysql_compat import translate_mysql
 from myduckserver_spark.types import schema_from_mysql, spark_to_mysql
 
@@ -965,7 +966,7 @@ class Engine:
     ) -> ParquetTable:
         if not isinstance(schema, StructType):
             schema = schema_from_mysql(schema)
-        df = self.spark.createDataFrame(rows or [], schema)
+        df = local_frame(self.spark, rows or [], schema)
         return self.catalog.create_table(name, df, partition_by=partition_by)
 
     def drop_table(self, name: str) -> None:
@@ -6409,7 +6410,7 @@ class Engine:
                 if rows:
                     for var, col in assigns:
                         self.variables[var] = rows[-1][col]
-                return self.spark.createDataFrame(rows, df.schema)
+                return local_frame(self.spark, rows, df.schema)
             return df
         if isinstance(s, st.DeclareCursor):
             df = self.sql(s.query, dialect=dialect)
@@ -6436,7 +6437,7 @@ class Engine:
                         break
             if s.move_only:
                 return OkResult(affected_rows=len(rows), info="MOVE")
-            return self.spark.createDataFrame(rows, schema)
+            return local_frame(self.spark, rows, schema)
         if isinstance(s, st.CloseCursor):
             cursors = getattr(self, "_cursors", {})
             if s.name.upper() == "ALL":
@@ -6522,7 +6523,7 @@ class Engine:
             # MySQL: LIKE preserves the AUTO_INCREMENT attribute but
             # NOT the source's counter — the clone starts fresh
             meta.stats.pop("auto_increment_base", None)
-            empty = self.spark.createDataFrame([], src.read().schema)
+            empty = local_frame(self.spark, [], src.read().schema)
             self.catalog.create_table(
                 s.name, empty, partition_by=meta.partition_by or None
             )
@@ -7645,7 +7646,7 @@ class Engine:
     @staticmethod
     def _py_cast(v, dtype: T.DataType):
         """Cast a parsed literal to the Python value Spark expects for
-        `dtype` (createDataFrame is strict about row types)."""
+        `dtype` (local_frame is strict about row types)."""
         import datetime as dt
 
         if v is None:
@@ -7815,7 +7816,8 @@ class Engine:
                             resolved.append(r)
                     pyrows = resolved
                     ai_next_base = ctr
-            df = self.spark.createDataFrame(
+            df = local_frame(
+                self.spark,
                 pyrows, T.StructType([
                     T.StructField(c, fields[c], True) for c in target
                 ])
@@ -9058,7 +9060,8 @@ class Engine:
         for k in range(depth):
             todo = [(eid, rows[k]) for eid, rows in chains.items()
                     if len(rows) > k]
-            local = self.spark.createDataFrame(
+            local = local_frame(
+                self.spark,
                 [tuple([eid]
                        + [ents[eid][c] for c in base_cols]
                        + [r[c] for c in base_cols])
@@ -9118,16 +9121,15 @@ class Engine:
              for f in base.schema.fields]
         )
 
-        local_df = self.spark.createDataFrame
         live = [tuple(e[c] for c in base_cols)
                 for e, a in zip(ents, alive) if a]
         t.overwrite(kept.select(*base_cols).unionByName(
-            local_df(live, out_schema)))
-        ins_img = local_df(inserted_rows, out_schema) \
+            local_frame(self.spark, live, out_schema)))
+        ins_img = local_frame(self.spark, inserted_rows, out_schema) \
             if want_insert_image else None
         upd_pairs = None
         if want_update_pairs:
-            upd_pairs = local_df(pair_rows, T.StructType(
+            upd_pairs = local_frame(self.spark, pair_rows, T.StructType(
                 [T.StructField(f"old_{f.name}", f.dataType, True)
                  for f in base.schema.fields]
                 + [T.StructField(f"new_{f.name}", f.dataType, True)
@@ -9255,9 +9257,9 @@ class Engine:
             out_rows.append(
                 (f"{self.current_db}.{name}", "analyze", "status", "OK")
             )
-        return self.spark.createDataFrame(
-            out_rows, "Table string, Op string, Msg_type string, "
-                      "Msg_text string",
+        return local_frame(
+            self.spark, out_rows,
+            "Table string, Op string, Msg_type string, Msg_text string",
         )
 
     # ------------------------------------------------------ change feed
@@ -10022,9 +10024,7 @@ class Engine:
                 if total >= 1 << 63:
                     total -= 1 << 64
                 rows.append((f"{self.current_db}.{t}", total))
-            return self.spark.createDataFrame(
-                rows, "Table string, Checksum long"
-            )
+            return local_frame(self.spark, rows, "Table string, Checksum long")
         op = s.kind  # check | repair
         for t in s.targets:
             if self.catalog.table(t).exists():
@@ -10034,9 +10034,9 @@ class Engine:
                     (f"{self.current_db}.{t}", op, "Error",
                      f"Table '{t}' doesn't exist")
                 )
-        return self.spark.createDataFrame(
-            rows, "Table string, Op string, Msg_type string, "
-                  "Msg_text string"
+        return local_frame(
+            self.spark, rows,
+            "Table string, Op string, Msg_type string, Msg_text string",
         )
 
     def _exec_show(self, s: st.Show) -> DataFrame:
@@ -10050,8 +10050,8 @@ class Engine:
             if val is None:
                 raise ValueError(
                     f'unrecognized configuration parameter "{name}"')
-            return self.spark.createDataFrame(
-                [(str(val),)], f"`{name}` string")
+            return local_frame(
+                self.spark, [(str(val),)], f"`{name}` string")
         if s.kind == "tables":
             if s.target:  # SHOW TABLES FROM/IN otherdb
                 if s.target not in self._dbs:
@@ -10065,8 +10065,8 @@ class Engine:
                 if s.like:
                     rx = _like_to_re(s.like)
                     names = [n for n in names if rx.match(n)]
-                return self.spark.createDataFrame(
-                    [(n,) for n in names],
+                return local_frame(
+                    self.spark, [(n,) for n in names],
                     f"`Tables_in_{s.target}` string",
                 )
             names = sorted(
@@ -10076,8 +10076,8 @@ class Engine:
             if s.like:
                 rx = _like_to_re(s.like)
                 names = [n for n in names if rx.match(n)]
-            return self.spark.createDataFrame(
-                [(n,) for n in names],
+            return local_frame(
+                self.spark, [(n,) for n in names],
                 f"Tables_in_{self.current_db} string",
             )
         if s.kind == "full_tables":
@@ -10089,7 +10089,8 @@ class Engine:
             if s.like:
                 rx = _like_to_re(s.like)
                 names = [n for n in names if rx.match(n)]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(n, "VIEW" if n in views else "BASE TABLE")
                  for n in names],
                 f"Tables_in_{self.current_db} string, Table_type string",
@@ -10097,7 +10098,8 @@ class Engine:
         if s.kind == "open_tables":
             # no table-handle cache here: every table is open-on-read
             # (MySQL semantics: In_use 0 = unlocked)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(self.current_db, n, 0, 0)
                  for n in sorted(self.catalog.list_tables())],
                 "Database string, Table string, In_use int, "
@@ -10118,11 +10120,12 @@ class Engine:
                     for g in rec["grants"]
                 ]
                 label = s.target.replace("'", "")
-                return self.spark.createDataFrame(
-                    rows, f"`Grants for {label}` string"
+                return local_frame(
+                    self.spark, rows, f"`Grants for {label}` string"
                 )
             # current session: the root grant MySQL clients expect
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("GRANT ALL PRIVILEGES ON *.* TO 'root'@'%' "
                   "WITH GRANT OPTION",)],
                 "`Grants for root@%` string",
@@ -10136,7 +10139,8 @@ class Engine:
             ck = (" WITH CASCADED CHECK OPTION" if os.path.exists(
                 os.path.join(self.catalog.root, "__views__",
                              f"{s.target}.check")) else "")
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(
                     s.target,
                     f"CREATE VIEW `{s.target}` AS {body}{ck}",
@@ -10172,8 +10176,8 @@ class Engine:
                 )
                 for c in df.columns
             ]
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "column_name string, column_type string, min string, "
                 "max string, approx_unique bigint, null_percentage "
                 "double, count bigint",
@@ -10181,14 +10185,16 @@ class Engine:
         if s.kind == "processlist":
             # Single-session engine: one connection row (reference
             # serves this via GMS's process registry).
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(1, "spark", "localhost", self.current_db, "Query", 0,
                   "executing", "SHOW PROCESSLIST")],
                 "Id bigint, User string, Host string, db string, "
                 "Command string, Time int, State string, Info string",
             )
         if s.kind == "engines":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("parquet-spark", "DEFAULT",
                   "Versioned parquet snapshots executed by Spark SQL",
                   "YES", "NO", "NO")],
@@ -10206,8 +10212,8 @@ class Engine:
             if s.like:
                 rx = _like_to_re(s.like)
                 rows = [r for r in rows if rx.match(r[0])]
-            return self.spark.createDataFrame(
-                rows, "Variable_name string, Value string"
+            return local_frame(
+                self.spark, rows, "Variable_name string, Value string"
             )
         if s.kind == "charset":
             from myduckserver_spark.functions.charset import CHARSETS
@@ -10219,7 +10225,8 @@ class Engine:
             if s.like:
                 rx = _like_to_re(s.like)
                 rows = [r for r in rows if rx.match(r[0])]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 rows, "Charset string, Description string, `Default "
                       "collation` string, Maxlen int",
             )
@@ -10235,17 +10242,18 @@ class Engine:
             if s.like:
                 rx = _like_to_re(s.like)
                 rows = [r for r in rows if rx.match(r[0])]
-            return self.spark.createDataFrame(
-                rows, "Collation string, Charset string, Id int, "
-                      "`Default` string, Compiled string, Sortlen int",
+            return local_frame(
+                self.spark, rows,
+                "Collation string, Charset string, Id int, "
+                "`Default` string, Compiled string, Sortlen int",
             )
         if s.kind == "databases":
             names = sorted(self._dbs)
             if s.like:
                 rx = _like_to_re(s.like)
                 names = [n for n in names if rx.match(n)]
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "Database string"
+            return local_frame(
+                self.spark, [(n,) for n in names], "Database string"
             )
         if s.kind == "table_status":
             # SHOW TABLE STATUS (reference: GMS TestShowTableStatus).
@@ -10275,8 +10283,8 @@ class Engine:
                     n, "parquet", 10, "Columnar", n_rows, avg, n_bytes,
                     None, ctime, "utf8mb4_0900_ai_ci", "",
                 ))
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "Name string, Engine string, Version int, Row_format "
                 "string, Rows bigint, Avg_row_length bigint, Data_length "
                 "bigint, Auto_increment bigint, Create_time timestamp, "
@@ -10301,12 +10309,14 @@ class Engine:
             if s.like:  # SHOW COLUMNS ... LIKE / DESCRIBE t col
                 rx = _like_to_re(s.like)
                 rows = [r for r in rows if rx.match(r[0])]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 rows, "Field string, Type string, Null string, Key string, "
                       "Default string, Extra string",
             )
         if s.kind == "create_database":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(s.target,
                   f"CREATE DATABASE `{s.target}` /*!40100 DEFAULT "
                   "CHARACTER SET utf8mb4 */")],
@@ -10314,17 +10324,19 @@ class Engine:
             )
         if s.kind == "xa_recover":
             # no in-doubt branches: single resource manager
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [], "formatID long, gtrid_length int, bqual_length int, "
                     "data string",
             )
         if s.kind == "profiles":
             # profiling is always off: empty set (MySQL's default)
-            return self.spark.createDataFrame(
-                [], "Query_ID int, Duration double, Query string"
+            return local_frame(
+                self.spark, [], "Query_ID int, Duration double, Query string"
             )
         if s.kind == "engine_status":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("parquet-spark", s.target,
                   "versioned parquet snapshots; no engine-internal "
                   "buffers or mutexes to report")],
@@ -10404,7 +10416,8 @@ class Engine:
                 # rendering would not round-trip through a dump/restore
                 ddl += " PARTITIONED BY (" + ", ".join(
                     f"`{c}`" for c in meta.partition_by) + ")"
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(s.target, ddl)], "Table string, `Create Table` string"
             )
         if s.kind == "indexes":
@@ -10418,7 +10431,8 @@ class Engine:
                         (s.target, iname, col, i + 1,
                          0 if props.get("unique") else 1)
                     )
-            df = self.spark.createDataFrame(
+            df = local_frame(
+                self.spark,
                 rows, "Table string, Key_name string, Column_name string, "
                       "Seq_in_index int, Non_unique int",
             )
@@ -10430,8 +10444,8 @@ class Engine:
             if s.like:
                 rx = _like_to_re(s.like)
                 items = [(k, v) for k, v in items if rx.match(k)]
-            return self.spark.createDataFrame(
-                [(k, str(v)) for k, v in items],
+            return local_frame(
+                self.spark, [(k, str(v)) for k, v in items],
                 "Variable_name string, Value string",
             )
         if s.kind == "subscriptions":
@@ -10456,8 +10470,8 @@ class Engine:
                         int(pos),
                     )
                 )
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "Subscription string, Publication string, Target string, "
                 "Feed string, Enabled boolean, Position long",
             )
@@ -10477,8 +10491,8 @@ class Engine:
                     rows.append(
                         (name, app_id, int(pos), f"segment-{seg:06d}", off)
                     )
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "Table string, Source_app string, Position long, "
                 "File string, File_offset long",
             )
@@ -10488,13 +10502,13 @@ class Engine:
         # trigger bodies and other documented divergences surface here
         # instead of passing silently.
         if s.kind == "warnings":
-            return self.spark.createDataFrame(
-                list(getattr(self, "_session_warnings", [])),
+            return local_frame(
+                self.spark, list(getattr(self, "_session_warnings", [])),
                 "Level string, Code int, Message string",
             )
         if s.kind == "warning_count":
-            return self.spark.createDataFrame(
-                [(len(getattr(self, "_session_warnings", [])),)],
+            return local_frame(
+                self.spark, [(len(getattr(self, "_session_warnings", [])),)],
                 "`@@session.warning_count` int",
             )
         if s.kind == "triggers":
@@ -10503,8 +10517,8 @@ class Engine:
                  t["timing"].upper(), None, "", "root@localhost")
                 for n, t in sorted(self._load_triggers().items())
             ]
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "Trigger string, Event string, Table string, "
                 "Statement string, Timing string, Created timestamp, "
                 "sql_mode string, Definer string",
@@ -10520,8 +10534,8 @@ class Engine:
                     em.group(2).upper() if em else None,
                     None, None, ev["status"],
                 ))
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "Db string, Name string, Definer string, `Time zone` "
                 "string, Type string, `Execute at` timestamp, "
                 "`Interval value` string, `Interval field` string, "
@@ -10542,8 +10556,8 @@ class Engine:
                     for n in sorted(self._load_macros())
                 ]
             rows.sort(key=lambda r: (r[2], r[1]))
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "Db string, Name string, Type string, Definer string, "
                 "Modified timestamp, Created timestamp, "
                 "Security_type string, Comment string",
@@ -10561,8 +10575,8 @@ class Engine:
                 )
                 ddl = (f"CREATE PROCEDURE `{p['name']}`({pars})\n"
                        f"BEGIN {p['body']}; END")
-                return self.spark.createDataFrame(
-                    [(p["name"], "", ddl)],
+                return local_frame(
+                    self.spark, [(p["name"], "", ddl)],
                     "Procedure string, sql_mode string, "
                     "`Create Procedure` string",
                 )
@@ -10573,13 +10587,14 @@ class Engine:
             ddl = (f"CREATE FUNCTION `{s.target}`("
                    + ", ".join(f"{x} TEXT" for x in pars)
                    + f") RETURNS TEXT RETURN {body}")
-            return self.spark.createDataFrame(
-                [(s.target, "", ddl)],
+            return local_frame(
+                self.spark, [(s.target, "", ddl)],
                 "Function string, sql_mode string, "
                 "`Create Function` string",
             )
         if s.kind == "plugins":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     ("parquet-spark", "ACTIVE", "STORAGE ENGINE",
                      None, "GPL"),
@@ -10592,7 +10607,8 @@ class Engine:
         if s.kind == "privileges":
             # single-root deployment (auth is a documented non-goal,
             # same as the SHOW GRANTS stub)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("All", "Server Admin",
                   "All privileges (single-root deployment)")],
                 "Privilege string, Context string, Comment string",
@@ -10607,14 +10623,16 @@ class Engine:
                     if seg not in seen:
                         seen.add(seg)
                         rows.append((f"segment-{seg:06d}", int(pos), "No"))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 rows, "Log_name string, File_size long, Encrypted string"
             )
         if s.kind == "help":
             # the client-side HELP protocol (mysql help tables); a
             # pointer row keeps interactive clients functional
             topic = (s.like or "").strip()
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(topic, "Server-side help tables are not loaded; "
                   "see https://dev.mysql.com/doc/ for topic "
                   f"'{topic}'", "")],
@@ -10633,8 +10651,8 @@ class Engine:
                          int(pos), "Table_map", 1, int(pos),
                          f"table={name} applier={app}")
                     )
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "Log_name string, Pos long, Event_type string, "
                 "Server_id int, End_log_pos long, Info string",
             )

@@ -11,7 +11,7 @@ internal_views.go:51 ``pg_index``) so pg tooling can introspect.
 Spark temp views can't hold a dot, so the SQL front door rewrites
 ``information_schema.tables`` → ``information_schema__tables`` (and
 ``__sys__.x`` → ``__sys____x``) and registers the referenced views on
-demand.  Each view is a small driver-side createDataFrame built from
+demand.  Each view is a small driver-side local frame built from
 catalog metadata — these are metadata queries; no Spark job should be
 needed to *build* them (TABLE_ROWS is NULL for that reason, matching
 MySQL's "approximate, may be NULL" contract).
@@ -24,6 +24,8 @@ import os
 import re
 
 from pyspark.sql import DataFrame
+
+from myduckserver_spark.frames import local_frame
 
 # information_schema.<name> / __sys__.<name> / pg_catalog.<name>.
 _QUALIFIED = re.compile(
@@ -174,8 +176,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
     spark = engine.spark
     if (schema, view) == ("information_schema", "schemata"):
         rows = [("def", db, "utf8mb4", "utf8mb4_0900_bin") for db, _ in _walk(engine)]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "CATALOG_NAME string, SCHEMA_NAME string, "
             "DEFAULT_CHARACTER_SET_NAME string, DEFAULT_COLLATION_NAME string",
         )
@@ -185,8 +187,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
 
         rows = [(n, f"{n}_general_ci", f"{n} charset", 4)
                 for n in sorted(CHARSETS)]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "CHARACTER_SET_NAME string, DEFAULT_COLLATE_NAME string, "
             "DESCRIPTION string, MAXLEN int",
         )
@@ -198,14 +200,15 @@ def build(engine, schema: str, view: str) -> DataFrame:
         for i, n in enumerate(sorted(CHARSETS)):
             rows.append((f"{n}_general_ci", n, 100 + i, "Yes", "Yes", 1))
             rows.append((f"{n}_bin", n, 200 + i, "", "Yes", 1))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "COLLATION_NAME string, CHARACTER_SET_NAME string, ID int, "
             "IS_DEFAULT string, IS_COMPILED string, SORTLEN int",
         )
 
     if (schema, view) == ("information_schema", "engines"):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [("parquet-spark", "DEFAULT",
               "Versioned parquet snapshots executed by Spark SQL",
               "YES", "NO", "NO")],
@@ -215,7 +218,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
 
     if (schema, view) == ("information_schema", "processlist"):
         who = getattr(engine, "_session_user", None) or "root@localhost"
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(1, str(who).replace("'", ""), "localhost",
               engine.current_db, "Query", 0, "executing", None)],
             "ID bigint, USER string, HOST string, DB string, "
@@ -226,8 +230,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
         rows = [("'root'@'%'", "def", "ALL PRIVILEGES", "YES")]
         for u in sorted(getattr(engine, "_load_users", dict)() or {}):
             rows.append((f"'{u}'@'%'", "def", "USAGE", "NO"))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "GRANTEE string, TABLE_CATALOG string, PRIVILEGE_TYPE string, "
             "IS_GRANTABLE string",
         )
@@ -239,8 +243,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                 rows.append(("def", db, t, "BASE TABLE", "spark-parquet", None))
             for v in _view_names(cat):
                 rows.append(("def", db, v, "VIEW", None, None))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
             "TABLE_TYPE string, ENGINE string, TABLE_ROWS bigint",
         )
@@ -267,8 +271,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                         if is_str else None,
                         "utf8mb4_0900_bin" if is_str else None,
                     ))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
             "COLUMN_NAME string, ORDINAL_POSITION int, COLUMN_DEFAULT string, "
             "IS_NULLABLE string, DATA_TYPE string, COLUMN_TYPE string, "
@@ -285,8 +289,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                 ck = ("CASCADED" if os.path.exists(os.path.join(
                     cat.root, "__views__", f"{v}.check")) else "NONE")
                 rows.append(("def", db, v, _view_sql(cat, v), ck, "YES"))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
             "VIEW_DEFINITION string, CHECK_OPTION string, IS_UPDATABLE string",
         )
@@ -302,8 +306,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                     non_unique = 0 if props.get("unique") else 1
                     for i, col in enumerate(props.get("columns", [])):
                         rows.append(("def", db, t, non_unique, iname, i + 1, col))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
             "NON_UNIQUE int, INDEX_NAME string, SEQ_IN_INDEX int, "
             "COLUMN_NAME string",
@@ -326,8 +330,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                     )
                 else:
                     rows.append(("def", db, t, None, None, None, None))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "TABLE_CATALOG string, TABLE_SCHEMA string, "
             "TABLE_NAME string, PARTITION_NAME string, "
             "PARTITION_ORDINAL_POSITION int, PARTITION_METHOD string, "
@@ -359,8 +363,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                             ("def", fk["name"], db, t, col, i + 1,
                              db, fk["ref_table"], rcol)
                         )
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "CONSTRAINT_CATALOG string, CONSTRAINT_NAME string, "
             "TABLE_SCHEMA string, TABLE_NAME string, COLUMN_NAME string, "
             "ORDINAL_POSITION int, REFERENCED_TABLE_SCHEMA string, "
@@ -378,8 +382,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                          "NONE", fk["on_update"], fk["on_delete"],
                          t, fk["ref_table"])
                     )
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "CONSTRAINT_CATALOG string, CONSTRAINT_SCHEMA string, "
             "CONSTRAINT_NAME string, UNIQUE_CONSTRAINT_CATALOG string, "
             "UNIQUE_CONSTRAINT_SCHEMA string, UNIQUE_CONSTRAINT_NAME "
@@ -402,8 +406,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                         rows.append(("def", iname, db, t, "UNIQUE"))
                 for fk in meta.foreign_keys:
                     rows.append(("def", fk["name"], db, t, "FOREIGN KEY"))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "CONSTRAINT_CATALOG string, CONSTRAINT_NAME string, "
             "TABLE_SCHEMA string, TABLE_NAME string, CONSTRAINT_TYPE string",
         )
@@ -421,8 +425,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
             )
         ]
         rows.sort(key=lambda r: (r[2], r[0]))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "ROUTINE_NAME string, ROUTINE_SCHEMA string, "
             "ROUTINE_TYPE string, DATA_TYPE string, "
             "ROUTINE_DEFINITION string, ROUTINE_BODY string",
@@ -434,8 +438,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
              t["body"], t["timing"].upper(), "ROW")
             for n, t in sorted(engine._load_triggers().items())
         ]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "TRIGGER_NAME string, EVENT_MANIPULATION string, "
             "EVENT_OBJECT_SCHEMA string, EVENT_OBJECT_TABLE string, "
             "ACTION_STATEMENT string, ACTION_TIMING string, "
@@ -449,8 +453,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
         for db, cat in _walk(engine):
             for t in cat.list_tables():
                 rows.append((f"{db}.{t}", db, t, 0, 0, 0, 0, 0, 0, 0))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "relid string, schemaname string, relname string, seq_scan long, "
             "idx_scan long, n_tup_ins long, n_tup_upd long, n_tup_del long, "
             "n_live_tup long, n_dead_tup long",
@@ -479,8 +483,8 @@ def build(engine, schema: str, view: str) -> DataFrame:
                         bool(props.get("unique")), False,
                         [pos[c] for c in props.get("columns", []) if c in pos],
                     ))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "indexrelid long, indrelid string, indnatts int, "
             "indisunique boolean, indisprimary boolean, indkey array<int>",
         )
@@ -572,8 +576,8 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
                 _ENUM_OID_BASE + i, tname, _NSP_PG_CATALOG,
                 "e" if spec["kind"] == "enum" else "d", 0, 0,
             ))
-        return spark.createDataFrame(
-            sorted(rows),
+        return local_frame(
+            spark, sorted(rows),
             "oid long, typname string, typnamespace long, "
             "typtype string, typelem long, typarray long",
         )
@@ -589,8 +593,8 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
                     _ENUM_OID_BASE + 1000 + i * 100 + j,
                     _ENUM_OID_BASE + i, float(j + 1), label,
                 ))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "oid long, enumtypid long, enumsortorder double, "
             "enumlabel string",
         )
@@ -601,12 +605,12 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
         rows = [(_NSP_PG_CATALOG, "pg_catalog"),
                 (_NSP_INFO_SCHEMA, "information_schema")]
         rows += [(oid, db) for db, oid in sorted(nsp.items(), key=lambda kv: kv[1])]
-        return spark.createDataFrame(rows, "oid long, nspname string")
+        return local_frame(spark, rows, "oid long, nspname string")
 
     if view == "pg_class":
         rows = [(oid, name, ns, kind, natts) for oid, name, ns, kind, natts, _ in classes]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "oid long, relname string, relnamespace long, relkind string, "
             "relnatts int",
         )
@@ -619,8 +623,8 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
                     oid, f_.name, _pg_type_oid(f_.dataType.simpleString()),
                     i + 1, not f_.nullable,
                 ))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "attrelid long, attname string, atttypid long, attnum int, "
             "attnotnull boolean",
         )
@@ -632,7 +636,8 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
             for _oid, name, ns, kind, _natts, _f in classes
             if kind == "r"
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows, "schemaname string, tablename string, tableowner string"
         )
 
@@ -648,7 +653,8 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
                         rows.append(
                             (engine.current_db, f_[:-4], fh.read().strip())
                         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows, "schemaname string, viewname string, definition string"
         )
 
@@ -666,8 +672,8 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
                         spec = _j.load(fh)
                     rows.append((engine.current_db, f_[:-4],
                                  spec.get("sql", "")))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "schemaname string, matviewname string, definition string",
         )
 
@@ -676,7 +682,7 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
             (_NSP_PG_CATALOG + 100 + i, db)
             for i, db in enumerate(sorted(engine._dbs))
         ]
-        return spark.createDataFrame(rows, "oid long, datname string")
+        return local_frame(spark, rows, "oid long, datname string")
 
     if view == "pg_indexes":
         rows = []
@@ -691,8 +697,8 @@ def _build_pg_catalog(engine, view: str) -> DataFrame:
                     engine.current_db, t, iname,
                     f"CREATE INDEX {iname} ON {t} USING {kind} ({cols})",
                 ))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "schemaname string, tablename string, indexname string, "
             "indexdef string",
         )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from myduckserver_spark.frames import local_frame
 from myduckserver_spark.operators.dedup import (
     lsh_bands,
     minhash_signatures,
@@ -35,7 +36,7 @@ def _store_read(catalog, store_name: str, schema: str) -> DataFrame:
     t = catalog.table(store_name)
     if t.exists():
         return t.read()
-    return catalog.spark.createDataFrame([], schema)
+    return local_frame(catalog.spark, [], schema)
 
 
 def exact_incremental(

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from myduckserver_spark.frames import local_frame
+
 _CACHE_SCHEMA = "prompt_fp string, response string"
 
 
@@ -69,7 +71,7 @@ def semantic_map(
         cached = (
             t.read()
             if t.exists()
-            else catalog.spark.createDataFrame([], _CACHE_SCHEMA)
+            else local_frame(catalog.spark, [], _CACHE_SCHEMA)
         )
         misses = distinct.join(cached, "prompt_fp", "left_anti")
     else:

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myduckserver_spark.frames import local_frame
 from myduckserver_spark.operators.cdc import apply_cdc, condense
 from myduckserver_spark.plans.registry import register
 from myduckserver_spark.tables import load_table
@@ -174,8 +175,8 @@ def cdc_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cat.create_table("acct", cust.select(
         F.col("c_custkey").alias("pk"), F.col("c_acctbal").alias("val")))
-    cat.create_table("hist", spark.createDataFrame(
-        [(0, 0.0)], "pk long, val double"))
+    cat.create_table(
+        "hist", local_frame(spark, [(0, 0.0)], "pk long, val double"))
 
     acct_delta = orders.select(
         F.col("o_custkey").alias("pk"),

@@ -30,15 +30,20 @@ file").
 
 from __future__ import annotations
 
+import datetime as dt
+import decimal
 import json
 import os
+import re
 import time
+import zoneinfo
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from myduckserver_spark.catalog import ParquetTable
+from myduckserver_spark.frames import local_frame
 from myduckserver_spark.operators.cdc import (
     ACTION_DELETE,
     ACTION_INSERT,
@@ -217,6 +222,106 @@ _AUGMENTED_FIELDS = [
     T.StructField("txn_stmt", T.LongType()),
 ]
 
+# CAST(string AS TIMESTAMP/DATE) text shapes: yyyy[-m[m][-d[d]]], then
+# for timestamps an optional [ T]h[h]:m[m][:s[s][.fraction]] and zone.
+_TS_TEXT = re.compile(
+    r"\s*(\d{4})(?:-(\d{1,2})(?:-(\d{1,2})"
+    r"(?:[ T](\d{1,2}):(\d{1,2})(?::(\d{1,2})(?:\.(\d*))?)?"
+    r"\s*(Z|[+-]\d{1,2}(?::?\d{2})?)?)?)?)?\s*"
+)
+_DATE_TEXT = re.compile(
+    r"\s*(\d{4})(?:-(\d{1,2})(?:-(\d{1,2}))?)?(?:[ T].*)?\s*")
+
+
+def _zone(name: str) -> dt.tzinfo:
+    m = re.fullmatch(r"(?:UTC|GMT)?([+-])(\d{1,2})(?::?(\d{2}))?", name)
+    if m:
+        off = dt.timedelta(hours=int(m.group(2)),
+                           minutes=int(m.group(3) or 0))
+        return dt.timezone(-off if m.group(1) == "-" else off)
+    return zoneinfo.ZoneInfo(name)
+
+
+def _text_timestamp(text: str, zone: dt.tzinfo | None) -> dt.datetime | None:
+    """`text` as CAST(text AS TIMESTAMP_NTZ) (zone None: any zone in the
+    text is ignored) or CAST(text AS TIMESTAMP) read in `zone`; None
+    where the cast yields NULL."""
+    m = _TS_TEXT.fullmatch(text)
+    if not m:
+        return None
+    y, mo, d, h, mi, sec, frac, tz = m.groups()
+    try:
+        v = dt.datetime(int(y), int(mo or 1), int(d or 1), int(h or 0),
+                        int(mi or 0), int(sec or 0),
+                        int((frac or "")[:6].ljust(6, "0")))
+    except ValueError:
+        return None
+    if zone is None:
+        return v
+    return v.replace(tzinfo=_zone(tz.replace("Z", "UTC")) if tz else zone)
+
+
+def _json_caster(dtype: T.DataType, session_zone: dt.tzinfo | None):
+    """Converter from a feed's JSON text (or number, for decimals) to
+    the Python value of a temporal or decimal `dtype`, as CAST(value AS
+    dtype) gives it; None for other types. Values already of the
+    field's Python type pass through."""
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        zone = session_zone if isinstance(dtype, T.TimestampType) else None
+        return lambda v: _text_timestamp(v, zone) if isinstance(v, str) else v
+    if isinstance(dtype, T.DateType):
+        def date(v):
+            if not isinstance(v, str):
+                return v
+            m = _DATE_TEXT.fullmatch(v)
+            try:
+                return dt.date(int(m.group(1)), int(m.group(2) or 1),
+                               int(m.group(3) or 1)) if m else None
+            except ValueError:
+                return None
+        return date
+    if isinstance(dtype, T.DecimalType):
+        limit = decimal.Decimal(10) ** (dtype.precision - dtype.scale)
+        q = decimal.Decimal(1).scaleb(-dtype.scale)
+
+        def dec(v):
+            if v is None or isinstance(v, bool):
+                return v
+            if not isinstance(v, decimal.Decimal):
+                try:
+                    v = decimal.Decimal(str(v).strip())
+                except decimal.InvalidOperation:
+                    return None
+            if not v.is_finite():
+                return None
+            v = v.quantize(q, rounding=decimal.ROUND_HALF_UP,
+                           context=decimal.Context(prec=80))
+            return v if abs(v) < limit else None
+        return dec
+    return None
+
+
+def events_frame(spark: SparkSession, payload_schema: T.StructType,
+                 events: list[CdcEvent]):
+    """The flush delta of `events`: each event's payload under
+    `payload_schema` plus the CDC columns ``merge_batch`` reads. JSON
+    text for temporal and decimal fields is cast to the field's type
+    the way Spark's CAST from string does (unparseable text → NULL)."""
+    schema = T.StructType(list(payload_schema.fields) + _AUGMENTED_FIELDS)
+    zone = None
+    if any(isinstance(f.dataType, T.TimestampType) for f in payload_schema):
+        zone = _zone(spark.conf.get("spark.sql.session.timeZone"))
+    fields = [(f.name, _json_caster(f.dataType, zone))
+              for f in payload_schema.fields]
+    data = [
+        tuple(ev.row.get(n) if c is None else c(ev.row.get(n))
+              for n, c in fields)
+        + (ev.action, "", bytearray(), ev.txn_group, ev.txn_seq,
+           ev.txn_stmt)
+        for ev in events
+    ]
+    return local_frame(spark, data, schema)
+
 
 @dataclass
 class FlushResult:
@@ -309,32 +414,11 @@ class CdcApplier:
         return None
 
     # ----------------------------------------------------------------- flush
-    def _rows_to_df(self):
-        fields = list(self.payload_schema.fields) + _AUGMENTED_FIELDS
-        schema = T.StructType(fields)
-        data = []
-        for ev in self._buffer:
-            payload = tuple(
-                ev.row.get(f.name) for f in self.payload_schema.fields
-            )
-            data.append(
-                payload
-                + (
-                    ev.action,
-                    "",
-                    bytearray(),
-                    ev.txn_group,
-                    ev.txn_seq,
-                    ev.txn_stmt,
-                )
-            )
-        return self.spark.createDataFrame(data, schema)
-
     def _flush(self, reason: str) -> FlushResult | None:
         if not self._buffer:
             return None
         position = self._buffer[-1].position
-        df = self._rows_to_df()
+        df = events_frame(self.spark, self.payload_schema, self._buffer)
         # Feeds with richer resume state than one scalar (a partitioned
         # log's per-partition offsets) expose state_at(position); it
         # commits in the SAME pointer write as the data + position.

@@ -42,7 +42,7 @@ from myduckserver_spark.streaming.cdc_source import (
     FLUSH_TIME_TICK,
     CdcEvent,
     FlushResult,
-    _AUGMENTED_FIELDS,
+    events_frame,
 )
 
 
@@ -187,19 +187,6 @@ class MultiTableCdcApplier:
         return None
 
     # ---------------------------------------------------------------- flush
-    def _events_to_df(self, name: str, events: list[CdcEvent]):
-        payload_schema = self.tables[name][1]
-        schema = T.StructType(
-            list(payload_schema.fields) + _AUGMENTED_FIELDS
-        )
-        data = [
-            tuple(ev.row.get(f.name) for f in payload_schema.fields)
-            + (ev.action, "", bytearray(),
-               ev.txn_group, ev.txn_seq, ev.txn_stmt)
-            for ev in events
-        ]
-        return self.spark.createDataFrame(data, schema)
-
     def _flush(self, reason: str) -> FlushResult | None:
         if not self._buffer:
             return None
@@ -214,7 +201,8 @@ class MultiTableCdcApplier:
         state_at = getattr(self.feed, "state_at", None)
         applied = self.catalog.merge_batch_multi(
             [
-                (name, self._events_to_df(name, evs), self.tables[name][0])
+                (name, events_frame(self.spark, self.tables[name][1], evs),
+                 self.tables[name][0])
                 for name, evs in by_table.items()
             ],
             txn_app_id=self.app_id,

@@ -9,6 +9,10 @@ engine resumes where the last atomic commit left off."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import types as T  # noqa: F401 (schema literals below)
 
@@ -144,6 +148,99 @@ def test_change_replication_filter(eng, tmp_path):
     eng.replica_poll()
     assert _state(eng, "acct") == [(1, 11.0), (2, 20.0)]  # filtered out
     assert _state(eng, "alog") == [(1, 0.0), (9, 9.0)]
+
+
+def _start_file_replica(e, path):
+    e.execute(f"CHANGE REPLICATION SOURCE TO SOURCE_HOST = "
+              f"'file://{path}', SOURCE_USER = 'repl'")
+    e.execute("START REPLICA")
+
+
+def test_temporal_and_decimal_text_events_apply(spark, tmp_path):
+    """Binlog JSON carries DATETIME, DATE, TIMESTAMP and DECIMAL values
+    as text or numbers. They apply as CAST(text AS type) gives them,
+    and the other table in the same feed applies too (a rejected value
+    used to wedge every later poll)."""
+    e = Engine(spark, str(tmp_path / "wh"))
+    e.execute("CREATE TABLE o (id BIGINT PRIMARY KEY, ts DATETIME, d DATE, "
+              "amt DECIMAL(10,2), at TIMESTAMP)")
+    e.execute("CREATE TABLE k (id BIGINT PRIMARY KEY, v DOUBLE)")
+    feed = FileCdcFeed(str(tmp_path / "feed"))
+    texts = [
+        (1, "1998-01-01 00:00:00", "1998-01-02", "12.345",
+         "2020-06-01 12:30:00.5"),
+        (2, "2001-02-03T04:05:06.123456", "2001-02-03 10:00:00", 7.5,
+         "2020-06-01T12:30:00+02:00"),
+        (3, "0000-00-00 00:00:00", "not a date", "123456789.99", None),
+    ]
+    for i, (oid, ts, d, amt, at) in enumerate(texts):
+        feed.append(ACTION_INSERT, {"id": oid, "ts": ts, "d": d,
+                                    "amt": amt, "at": at},
+                    table="o", txn_seq=2 * i)
+        feed.append(ACTION_INSERT, {"id": oid, "v": 1.0},
+                    table="k", txn_seq=2 * i + 1)
+    _start_file_replica(e, tmp_path / "feed")
+    e.replica_poll()
+    got = [tuple(r) for r in e.sql(
+        "SELECT id, ts, d, amt, at FROM o ORDER BY id").collect()]
+
+    def cast(v, to):
+        lit = "NULL" if v is None else f"'{v}'"
+        return spark.sql(f"SELECT CAST({lit} AS {to}) v").collect()[0].v
+
+    want = [(oid, cast(ts, "TIMESTAMP_NTZ"), cast(d, "DATE"),
+             cast(amt, "DECIMAL(10,2)"), cast(at, "TIMESTAMP"))
+            for oid, ts, d, amt, at in texts]
+    assert got == want
+    assert got[0][1:4] == (dt.datetime(1998, 1, 1), dt.date(1998, 1, 2),
+                           Decimal("12.35"))
+    assert sorted(r.id for r in e.sql("SELECT id FROM k").collect()) \
+        == [1, 2, 3]
+
+
+def _shuffle_read(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    total = 0
+    for j in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(j).stageIds:
+            try:
+                total += jsc.statusStore().lastStageAttempt(
+                    sid).shuffleReadBytes()
+            except Exception:
+                pass  # skipped stage: nothing ran, nothing read
+    return total
+
+
+def test_replica_flush_does_not_shuffle_the_table(spark, tmp_path):
+    # the flush delta is a driver-side relation of known size, so the
+    # merge broadcasts it instead of shuffling the stored table
+    e = Engine(spark, str(tmp_path / "wh"))
+    e.execute("CREATE TABLE big (id BIGINT PRIMARY KEY, v DOUBLE)")
+    e.execute("INSERT INTO big SELECT id, CAST(id AS DOUBLE) "
+              "FROM range(50000)")
+    feed = FileCdcFeed(str(tmp_path / "feed"))
+    _start_file_replica(e, tmp_path / "feed")
+    for i in range(20):
+        feed.append(ACTION_UPDATE, {"id": i * 997, "v": -1.0},
+                    table="big", txn_seq=i)
+    feed.append(ACTION_INSERT, {"id": 10 ** 6, "v": 1.0}, table="big",
+                txn_seq=20)
+    t = e.catalog.table("big")
+    table_bytes = sum(os.path.getsize(os.path.join(t.snapshot_dir(), f))
+                      for f in t.data_files())
+    read = _shuffle_read(spark, "replica_flush", e.replica_poll)
+    assert e.sql("SELECT COUNT(*) c FROM big").collect()[0].c == 50001
+    assert e.sql("SELECT COUNT(*) c FROM big WHERE v = -1").collect()[0].c \
+        == 20
+    assert read * 20 < table_bytes, (read, table_bytes)
 
 
 class _LoopbackBinlogServer:

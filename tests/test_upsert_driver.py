@@ -116,9 +116,10 @@ def _jobs_and_shuffle(spark, group, fn):
 
 @pytest.mark.parametrize("kind", ["odku", "on_conflict", "replace"])
 def test_one_row_upsert_is_shuffle_free(spark, engine, kind):
-    # a 1-row upsert touches O(1) rows: a candidate scan, at most one
-    # local evaluation job and a map-only write — never a shuffle of
-    # the stored table (the join tier ran ~20 jobs here)
+    # a 1-row upsert touches O(1) rows: a candidate scan and a
+    # map-only write. The batch and the assignments are driver-side
+    # local relations, so reading them back runs no job, and the
+    # stored table is never shuffled (the join tier ran ~20 jobs here)
     engine.execute(
         "CREATE TABLE kv (id BIGINT PRIMARY KEY, uk BIGINT, v BIGINT, "
         "UNIQUE KEY kv_uk (uk))")
@@ -138,7 +139,7 @@ def test_one_row_upsert_is_shuffle_free(spark, engine, kind):
     if dialect == "mysql":
         assert res["r"].affected_rows == 2  # MySQL: 2 per changed row
     assert engine.sql("SELECT v FROM kv WHERE id = 5").collect()[0].v == 9
-    assert jobs <= 6, f"{kind}: {jobs} Spark jobs"
+    assert jobs <= 2, f"{kind}: {jobs} Spark jobs"
     assert shuffle < 1024, f"{kind}: {shuffle} shuffle bytes written"
 
 
