@@ -1,32 +1,75 @@
-"""Versioned Parquet table storage + catalog.
+"""Log-structured Parquet table storage + catalog.
 
 The reference stores tables in one DuckDB file with ACID commits;
-without a Delta jar, the same contract (atomic snapshot replace,
-read-your-writes, idempotent replication apply) is provided by a
-versioned directory layout:
+without a Delta jar, the same contract (atomic commits, read-your-
+writes, idempotent replication apply) comes from an append-only log
+of immutable commit entries per table — Delta's protocol, kept small:
 
-    <root>/<table>/v{N}/*.parquet     — immutable snapshot N
-    <root>/<table>/_VERSION           — JSON: current version + txn marker
+    <root>/<table>/_log/{N}.json        — commit entry N (immutable)
+    <root>/<table>/d{N}-{tag}/*.parquet — data files written for entry N
+    <root>/<table>/_META                — engine-owned table metadata
 
-A writer materializes snapshot N+1 fully, then atomically renames the
-_VERSION pointer. Readers resolve _VERSION once per read. The txn
-marker (app_id, version) gives exactly-once CDC apply — the Spark twin
-of the reference committing the GTID inside the same transaction
-(reference binlogreplication/binlog_replica_applier.go:786-812,
-catalog/internal_tables.go:180-186).
+Entry N is created put-if-absent (a hard link of a fully written temp
+file: ``link`` fails with EEXIST exactly like ``O_CREAT|O_EXCL``, and
+a reader can never see a half-written entry), so of two writers that
+both prepared entry N the second gets ``CommitConflictError`` instead
+of silently replacing the first one's commit. An entry holds:
 
-At cluster scale the same layout works on object storage (rename of
-one small pointer file; data files are immutable) — the classic
-snapshot-pointer design Delta/Iceberg formalize.
+- ``add``: data files ``{path, rows, bytes[, delta]}`` (paths relative
+  to the table directory; ``rows`` comes from the parquet footer, so
+  counting a table runs no Spark job; ``delta`` marks the files of a
+  row-level commit);
+- ``remove``: paths of data files that stop being live;
+- ``dv``: the deletion vector of every data file whose vector changed
+  — the sorted row positions (parquet ``_metadata.row_index``) that
+  are no longer live. A vector replaces the file's previous one; a
+  vector that covers the whole file removes the file instead;
+- ``op``: ``write`` (every live file removed, new rows added),
+  ``rows`` (a row-level commit), ``fold`` (compaction) or ``restore``
+  (a rollback);
+- ``schema``, ``partition_by``, ``txn`` and ``txn_state``: the table
+  schema, its hive partitioning and the exactly-once CDC marks
+  (app_id -> applied position, plus source-specific resume state) —
+  the Spark twin of the reference committing the GTID inside the same
+  transaction (binlogreplication/binlog_replica_applier.go:786-812,
+  catalog/internal_tables.go:180-186).
+
+Version N is entries 0..N replayed. A read scans the live files; only
+files that carry a deletion vector get a ``row_index`` mask, so a
+table without one reads as one plain parquet scan. Statements that
+touch a few rows commit row by row ("add these rows, delete these
+positions": ``overwrite_pruned``); every other writer commits "remove
+all live files + add" (``overwrite``). Rolling back appends an entry
+that restores an older version's file set; time travel replays the
+log to N; VACUUM deletes data files no retained version references.
+
+Compaction rule: a row-level commit that leaves more than
+``FOLD_FILES`` live delta files (files written by row-level commits),
+or more than ``MAX_DV_ROWS`` deleted positions across the table's
+deletion vectors, is followed by a fold: one more entry that rewrites
+the live rows of every delta file and every file with a deletion
+vector into fresh files; the other files stay as they are. Read
+amplification therefore stays bounded with no setting to tune, at the
+price of one rewrite of the touched files per ``FOLD_FILES`` delta
+files — the reference's delta-buffer flush into its base storage
+(delta/controller.go:75-190) and Krypton's (VLDB 2023) write-optimized
+delta over a compacted base.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
+import urllib.parse
+import uuid
+from functools import reduce
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from myduckserver_spark.frames import local_frame
 from myduckserver_spark.operators.cdc import apply_cdc
@@ -48,6 +91,17 @@ _TARGET_WRITE_FILE_BYTES = 512 << 20
 # partition count as a Java int
 _MAX_WRITE_PARTITIONS = (1 << 31) - 1
 
+# The compaction rule (module docstring). 16 files keep a point read's
+# file listing and task packing at a handful of small files; 4096
+# deleted positions keep each scan's row_index mask a small hash set.
+FOLD_FILES = 16
+MAX_DV_ROWS = 4096
+
+# columns a positioned read appends: the data file (a URI, as Spark's
+# _metadata.file_path reports it) and the row's position in that file
+FILE_COL = "__file"
+POS_COL = "__pos"
+
 
 def _sized_for_write(df: DataFrame) -> DataFrame:
     try:
@@ -59,329 +113,462 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
     return df.coalesce(max(1, min(want, _MAX_WRITE_PARTITIONS)))
 
 
+class CommitConflictError(RuntimeError):
+    """Another writer committed the table version this commit was
+    prepared for; nothing of this commit became visible."""
+
+
+_EMPTY = {"version": -1, "files": {}, "dv": {}, "schema": None,
+          "partition_by": None, "txn": {}, "txn_state": {}}
+_META_KEYS = ("schema", "partition_by", "txn", "txn_state")
+
+
+def _replay(state: dict, entry: dict) -> dict:
+    """The table state after ``entry`` (a new dict; ``state`` is
+    shared by memo holders and never mutated)."""
+    files = dict(state["files"])
+    dv = dict(state["dv"])
+    for p in entry.get("remove", ()):
+        files.pop(p, None)
+        dv.pop(p, None)
+    for a in entry.get("add", ()):
+        files[a["path"]] = {k: v for k, v in a.items() if k != "path"}
+    for p, pos in entry.get("dv", {}).items():
+        dv[p] = pos
+    out = {k: entry.get(k) for k in _META_KEYS}
+    out["txn"] = out["txn"] or {}
+    out["txn_state"] = out["txn_state"] or {}
+    out.update(version=state["version"] + 1, files=files, dv=dv)
+    return out
+
+
 class ParquetTable:
     def __init__(self, spark: SparkSession, root: str, name: str,
                  read_cache: dict | None = None,
-                 count_cache: dict | None = None):
+                 states: dict | None = None):
         self.spark = spark
         self.name = name
         self.dir = os.path.join(root, name)
-        self._count_cache = count_cache
-        # Catalog-owned (name, version) -> DataFrame memo: plan-OBJECT
-        # reuse only (DataFrames are immutable logical plans; every
-        # action still re-executes). A statement touches its table's
-        # scan plan several times (schema fetch, key probes, the write
-        # union) and each fresh read() paid file listing + relation
-        # analysis + ~dozens of Py4J calls. Keyed by version, so any
-        # committed write (or restored pointer) invalidates naturally.
+        # Catalog-owned memos shared by every handle on the table:
+        # ``states`` holds the replayed log state per table name, and
+        # ``read_cache`` maps (name, N) [+ "pos"] to the DataFrame that
+        # reads version N. A DataFrame is an immutable logical plan
+        # (every action still re-executes), and entry N never changes
+        # once written, so (name, N) identifies the plan; the state
+        # memo drops a table's plans whenever its log is replaced
+        # (drop, rename, restore).
         self._read_cache = read_cache
+        self._states = states if states is not None else {}
         os.makedirs(self.dir, exist_ok=True)
 
-    # ------------------------------------------------------------- pointers
+    # ------------------------------------------------------------- the log
     @property
-    def _pointer_path(self) -> str:
-        return os.path.join(self.dir, "_VERSION")
+    def _log_dir(self) -> str:
+        return os.path.join(self.dir, "_log")
 
-    def _read_pointer(self) -> dict:
-        if not os.path.exists(self._pointer_path):
-            return {"version": -1, "txn": {}}
-        with open(self._pointer_path) as f:
+    def _entry_path(self, n: int) -> str:
+        return os.path.join(self._log_dir, f"{n}.json")
+
+    def entry(self, n: int) -> dict:
+        """Commit entry ``n`` as written."""
+        with open(self._entry_path(n)) as f:
             return json.load(f)
 
-    def _write_pointer(self, meta: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.dir, prefix="_VERSION.")
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._pointer_path)  # atomic on POSIX
+    def _state(self) -> dict:
+        """The latest committed state: the memoized replay, checked
+        against the identity of its last entry file and advanced by any
+        entries committed since (two stats per call when nothing
+        changed). Entries are immutable, so there is no window in which
+        a version number pairs with the wrong content."""
+        st = self._states.get(self.name)
+        if st is not None and st["version"] >= 0:
+            try:
+                f_ = os.stat(self._entry_path(st["version"]))
+                if (f_.st_ino, f_.st_mtime_ns) != st["id"]:
+                    st = None  # the table was dropped or replaced
+            except FileNotFoundError:
+                st = None
+        if st is None:
+            self._evict_plans()
+            st = _EMPTY
+        while True:
+            path = self._entry_path(st["version"] + 1)
+            try:
+                f_ = os.stat(path)
+            except FileNotFoundError:
+                break
+            with open(path) as fh:
+                st = _replay(st, json.load(fh))
+            st["id"] = (f_.st_ino, f_.st_mtime_ns)
+        self._states[self.name] = st
+        return st
+
+    def _evict_plans(self) -> None:
+        if self._read_cache is not None:
+            for k in [k for k in self._read_cache if k[0] == self.name]:
+                self._read_cache.pop(k, None)
+
+    def state_at(self, version: int) -> dict:
+        """Entries 0..version replayed (time travel)."""
+        if not 0 <= version <= self.version:
+            raise FileNotFoundError(
+                f"version {version} of {self.dir} does not exist "
+                "(never committed)")
+        st = _EMPTY
+        for n in range(version + 1):
+            st = _replay(st, self.entry(n))
+        return st
+
+    def commit(self, entry: dict) -> int:
+        """Create entry N put-if-absent and return N;
+        CommitConflictError if another writer already committed N."""
+        n = entry["version"]
+        os.makedirs(self._log_dir, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=self._log_dir, prefix=".entry.")
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(entry, f)
+            try:
+                os.link(tmp, self._entry_path(n))
+            except FileExistsError:
+                raise CommitConflictError(
+                    f"{self.name}: version {n} was committed by another "
+                    "writer") from None
+        finally:
+            os.remove(tmp)
+        return n
 
     @property
     def version(self) -> int:
-        return self._read_pointer()["version"]
+        return self._state()["version"]
 
     def exists(self) -> bool:
         return self.version >= 0
 
+    def live_files(self, version: int | None = None) -> list[str]:
+        """Data files of a version, relative to the table directory
+        (hive partition directories included)."""
+        st = self._state() if version is None else self.state_at(version)
+        return sorted(st["files"])
+
+    def data_bytes(self) -> int:
+        """On-disk size of the live data files."""
+        return sum(f_["bytes"] for f_ in self._state()["files"].values())
+
+    def deletion_vectors(self) -> dict[str, list[int]]:
+        return dict(self._state()["dv"])
+
+    def txn_marks(self) -> dict:
+        return dict(self._state()["txn"])
+
     # ----------------------------------------------------------------- I/O
-    def read(self) -> DataFrame:
-        meta = self._read_pointer()
-        if meta["version"] < 0:
-            raise FileNotFoundError(f"table has no committed snapshot: {self.dir}")
-        ck = None
-        if self._read_cache is not None:
-            try:
-                # the pointer file's identity, not just the version
-                # number: every commit os.replace()s the pointer (new
-                # inode), and restore/rename/txn-resurrect move whole
-                # directories — so a re-bound name can never hit a
-                # stale plan even at a repeated version number
-                pst = os.stat(self._pointer_path)
-                ck = (self.name, meta["version"], pst.st_ino,
-                      pst.st_mtime_ns)
-            except OSError:
-                ck = None
-        if ck is not None:
-            got = self._read_cache.get(ck)
-            if got is not None:
-                return got
-        df = self._read_snapshot(meta)
-        if ck is not None:
-            # keep only the live pointer per table (old plans are
-            # unreachable once the pointer moves); pop() because the
-            # multi-table flush reads from a small thread pool and two
-            # threads may race the same eviction
-            for k in [k for k in self._read_cache
-                      if k[0] == self.name and k != ck]:
-                self._read_cache.pop(k, None)
-            self._read_cache[ck] = df
+    def read(self, positioned: bool = False) -> DataFrame:
+        """The live rows. ``positioned`` appends FILE_COL and POS_COL,
+        the identity a row-level commit deletes by."""
+        st = self._state()
+        n = st["version"]
+        if n < 0:
+            raise FileNotFoundError(
+                f"table has no committed snapshot: {self.dir}")
+        memo = self._read_cache if self._read_cache is not None else {}
+        key = (self.name, n) + (("pos",) if positioned else ())
+        df = memo.get(key)
+        if df is None:
+            if positioned or not st["dv"]:
+                df = self._read_snapshot(st, positioned)
+            else:
+                # deletion vectors mask by row_index, so the scans read
+                # _metadata either way: share the positioned plan
+                df = self.read(positioned=True).drop(FILE_COL, POS_COL)
+            # keep only the live version's plans per table (older
+            # ones are unreachable); pop() because the multi-table
+            # flush reads from a small thread pool
+            for k in [k for k in memo if k[0] == self.name and k[1] != n]:
+                memo.pop(k, None)
+            memo[key] = df
         return df
 
-    def _read_snapshot(self, meta: dict) -> DataFrame:
-        path = os.path.join(self.dir, f"v{meta['version']}")
-        schema_json = meta.get("schema_json")
-        if not schema_json:
-            # pre-schema pointer (older snapshot): fall back to footer
-            # inference, which costs a schema-read job per read
-            return self.spark.read.parquet(path)
-        # The pointer carries the snapshot's schema, so the read needs
-        # no footer-inference job (one fewer Spark job on EVERY table
-        # read on every statement path), restores declared column order
-        # and partition-column types in one shot, and survives the
-        # all-rows-deleted case where the dir holds no data files.
-        # Fields are forced nullable: parquet data fields always read
-        # back nullable, and a non-nullable user schema over a file
-        # that does contain nulls would be undefined behavior.
-        from pyspark.sql import types as T
+    def _read_snapshot(self, st: dict, positioned: bool = False
+                       ) -> DataFrame:
+        # The entry carries the schema, so the read needs no footer-
+        # inference job, restores declared column order and partition
+        # column types in one shot, and survives the all-rows-deleted
+        # case with no data file. Fields are forced nullable: parquet
+        # data fields always read back nullable, and a non-nullable
+        # user schema over a file that does contain nulls would be
+        # undefined behavior.
+        schema = T.StructType([
+            T.StructField(f_.name, f_.dataType, True, f_.metadata)
+            for f_ in T.StructType.fromJson(json.loads(st["schema"])).fields
+        ])
+        cols = [F.col(f_.name) for f_ in schema.fields]
+        if positioned:
+            cols += [F.col("_metadata.file_path").alias(FILE_COL),
+                     F.col("_metadata.row_index").alias(POS_COL)]
+            schema = schema.add(FILE_COL, T.StringType()).add(
+                POS_COL, T.LongType())
+        reader = self.spark.read.schema(schema)
 
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        schema = T.StructType(
-            [
-                T.StructField(f_.name, f_.dataType, True, f_.metadata)
-                for f_ in schema.fields
-            ]
-        )
-        try:
-            df = self.spark.read.schema(schema).parquet(path)
-            return df.select(*[f_.name for f_ in schema.fields])
-        except Exception as e:
-            # ONLY the empty-snapshot case (every row deleted -> the
-            # version dir holds no partition files) may read as zero
-            # rows. Corruption, permissions, or transient IO must
-            # surface — silently returning empty would feed wrong
-            # results into queries and snapshot overwrites (ADVICE r2).
-            msg = str(e)
-            if (
-                "unable to infer schema" in msg.lower()
-                or "path does not exist" in msg.lower()
-                or "unable_to_infer_schema" in msg.upper()
-            ):
-                return local_frame(self.spark, [], schema)
-            raise
+        def scan(paths: list[str]) -> DataFrame:
+            r = reader
+            if st["partition_by"]:
+                # hive discovery needs one root per scan: the data
+                # directory of the commit that wrote the files
+                r = r.option("basePath", os.path.join(
+                    self.dir, paths[0].split(os.sep, 1)[0]))
+            return r.parquet(*[os.path.join(self.dir, p) for p in paths])
+
+        groups: dict[str, list[str]] = {}
+        for p in sorted(st["files"]):
+            if p not in st["dv"]:
+                root = p.split(os.sep, 1)[0] if st["partition_by"] else ""
+                groups.setdefault(root, []).append(p)
+        scans = [scan(ps).select(*cols) for ps in groups.values()]
+        for p, dv in sorted(st["dv"].items()):
+            scans.append(
+                scan([p]).where(~F.col("_metadata.row_index").isin(dv))
+                .select(*cols))
+        if scans:
+            return reduce(DataFrame.union, scans)
+        return local_frame(self.spark, [], schema)
 
     def count(self) -> int:
-        """Row count of the live snapshot, memoized per (version,
-        pointer identity): a snapshot is immutable, so the count job
-        runs once per committed version no matter how many statements
-        re-count it. REPLACE/IGNORE affected-rows bookkeeping counts
-        the table before AND after every statement — in a chain of
-        DML the before-count of statement N+1 is the after-count of
-        statement N, a guaranteed memo hit. Same key discipline as
-        the read-plan memo (pointer inode+mtime), so commits,
-        restores, renames and drop+recreate can never hit stale."""
-        ck = None
-        if self._count_cache is not None:
-            try:
-                meta = self._read_pointer()
-                pst = os.stat(self._pointer_path)
-                ck = (self.name, meta["version"], pst.st_ino,
-                      pst.st_mtime_ns)
-            except OSError:
-                ck = None
-        if ck is not None:
-            got = self._count_cache.get(ck)
-            if got is not None:
-                return got
-        n = self.read().count()
-        if ck is not None:
-            for k in [k for k in self._count_cache
-                      if k[0] == self.name and k != ck]:
-                self._count_cache.pop(k, None)
-            self._count_cache[ck] = n
-        return n
+        """Live row count from the log alone: file row counts (parquet
+        footers, recorded at commit) minus deleted positions — no Spark
+        job, whatever the table size."""
+        st = self._state()
+        if st["version"] < 0:
+            raise FileNotFoundError(
+                f"table has no committed snapshot: {self.dir}")
+        return (sum(f["rows"] for f in st["files"].values())
+                - sum(len(v) for v in st["dv"].values()))
 
     def read_version(self, version: int) -> DataFrame:
-        """Time-travel read of a historical snapshot (Delta-style
-        VERSION AS OF over the versioned-pointer layout). Raises if the
-        version was never committed or has been VACUUMed away."""
-        path = os.path.join(self.dir, f"v{version}")
-        if version < 0 or not os.path.isdir(path):
+        """Time-travel read (Delta-style VERSION AS OF). Raises if the
+        version was never committed or VACUUM removed its files."""
+        st = self.state_at(version)
+        if any(not os.path.exists(os.path.join(self.dir, p))
+               for p in st["files"]):
             raise FileNotFoundError(
-                f"version {version} of {self.dir} does not exist "
-                "(never committed, or removed by VACUUM)"
-            )
-        return self.spark.read.parquet(path)
+                f"version {version} of {self.dir} was removed by VACUUM")
+        return self._read_snapshot(st)
 
-    def set_partitioning(self, cols: list[str]) -> None:
-        """Declare hive partitioning; every subsequent snapshot write
-        partitions by these columns (partition pruning on read is the
-        Spark-side analog of the reference's per-partition DuckDB
-        storage). Must be set before data exists."""
-        meta = self._read_pointer()
-        if meta["version"] >= 0:
-            raise ValueError("cannot repartition a table with data")
-        meta["partition_by"] = list(cols)
-        self._write_pointer(meta)
+    # -------------------------------------------------------------- writes
+    def _file_of(self, uri: str) -> str:
+        """A positioned read's FILE_COL value (or a relative path) ->
+        the path relative to the table directory."""
+        p = urllib.parse.unquote(urllib.parse.urlparse(uri).path)
+        return os.path.relpath(p, self.dir) if os.path.isabs(p) else p
 
-    def prepare_snapshot(self, df: DataFrame,
+    def prepare_snapshot(self, df: DataFrame | None,
                          txn_app_id: str | None = None,
                          txn_version: int | None = None,
                          txn_state: dict | None = None,
-                         sized: bool = True) -> dict:
-        """Write the NEXT snapshot's data files without flipping the
-        pointer; return the pointer meta that would commit it.
+                         sized: bool = True, replace: bool = True,
+                         deletes: dict | None = None,
+                         partition_by: list[str] | None = None) -> dict:
+        """Write ``df``'s rows as new data files and return the log
+        entry that would commit them, without committing it.
 
-        This is the prepare half of a two-phase commit: a single-table
-        ``overwrite`` commits the returned meta immediately, while
-        ``Catalog.commit_multi`` journals N prepared metas and flips
-        all N pointers as one atomic transaction (the reference applies
-        a whole replication flush in ONE DuckDB transaction —
-        delta/controller.go:75-190). An unreferenced v{N} dir left by a
-        crash before the commit point is garbage, reclaimed by vacuum."""
-        meta = self._read_pointer()
-        new_v = meta["version"] + 1
-        parts = meta.get("partition_by")
-        w = (_sized_for_write(df) if sized else df).write.mode("overwrite")
-        # the pointer carries the snapshot schema so reads skip the
-        # footer-inference job (see read())
-        meta["schema_json"] = df.schema.json()
-        if parts:
-            missing = [c for c in parts if c not in df.columns]
-            if missing:
-                raise ValueError(f"partition columns missing: {missing}")
-            w = w.partitionBy(*parts)
-        w.parquet(os.path.join(self.dir, f"v{new_v}"))
+        ``replace`` removes every live file (a full rewrite); otherwise
+        the entry adds to the live files and ``deletes`` (FILE_COL
+        value -> row positions) extends their deletion vectors. This is
+        the prepare half of a two-phase commit: ``overwrite`` commits
+        the entry at once, while ``Catalog.commit_multi`` journals N
+        prepared entries and commits them as one transaction (the
+        reference applies a whole replication flush in ONE DuckDB
+        transaction — delta/controller.go:75-190). Data files of an
+        entry a crash left uncommitted are garbage for vacuum."""
+        st = self._state()
+        n = st["version"] + 1
+        parts = st["partition_by"]
+        if partition_by:
+            if n > 0:
+                raise ValueError("cannot repartition a table with data")
+            parts = list(partition_by)
+        entry = {"version": n, "commit": uuid.uuid4().hex,
+                 "op": "write" if replace else "rows",
+                 "schema": st["schema"], "partition_by": parts,
+                 "txn": dict(st["txn"]), "txn_state": dict(st["txn_state"]),
+                 "add": [], "remove": sorted(st["files"]) if replace else [],
+                 "dv": {}}
+        if df is not None:
+            if parts:
+                missing = [c for c in parts if c not in df.columns]
+                if missing:
+                    raise ValueError(f"partition columns missing: {missing}")
+            if replace or st["schema"] is None:
+                # the entry carries the schema so reads skip the
+                # footer-inference job (see _read_snapshot)
+                entry["schema"] = df.schema.json()
+            entry["add"] = self._write_files(df, n, parts, sized)
+        dead = set(entry["remove"])
+        for uri, pos in (deletes or {}).items():
+            p = self._file_of(uri)
+            if p not in st["files"]:
+                raise CommitConflictError(
+                    f"{self.name}: {p} is not a live data file")
+            dv = sorted(set(st["dv"].get(p, ())).union(pos))
+            if len(dv) >= st["files"][p]["rows"]:
+                dead.add(p)  # every row deleted: drop the file
+            else:
+                entry["dv"][p] = dv
+        entry["remove"] = sorted(dead)
         if txn_app_id is not None:
-            meta.setdefault("txn", {})[txn_app_id] = txn_version
+            entry["txn"][txn_app_id] = txn_version
             if txn_state is not None:
-                meta.setdefault("txn_state", {})[txn_app_id] = txn_state
-        meta["version"] = new_v
-        return meta
+                entry["txn_state"][txn_app_id] = txn_state
+        return entry
+
+    def _write_files(self, df: DataFrame, n: int, parts, sized: bool
+                     ) -> list[dict]:
+        out_dir = os.path.join(self.dir, f"d{n}-{uuid.uuid4().hex[:8]}")
+        w = (_sized_for_write(df) if sized else df).write.mode("overwrite")
+        if parts:
+            w = w.partitionBy(*parts)
+        w.parquet(out_dir)
+        added = []
+        for r, _, fs in os.walk(out_dir):
+            for f in fs:
+                if f.startswith((".", "_")) or not f.endswith(".parquet"):
+                    continue
+                p = os.path.join(r, f)
+                rows = pq.read_metadata(p).num_rows
+                if rows == 0:
+                    # an empty frame still writes one schema-only file;
+                    # the entry carries the schema, so it is not kept
+                    os.remove(p)
+                    continue
+                added.append({"path": os.path.relpath(p, self.dir),
+                              "rows": rows, "bytes": os.path.getsize(p)})
+        if not added:
+            shutil.rmtree(out_dir, ignore_errors=True)
+        return sorted(added, key=lambda a: a["path"])
 
     def overwrite(self, df: DataFrame, txn_app_id: str | None = None,
                   txn_version: int | None = None,
                   txn_state: dict | None = None,
-                  sized: bool = True) -> int:
-        """Materialize a new snapshot and atomically flip the pointer.
-
-        ``txn_state`` rides in the SAME pointer commit as the data and
-        the txn version — source-specific resume state (e.g. a
+                  sized: bool = True,
+                  partition_by: list[str] | None = None) -> int:
+        """Commit ``df`` as the whole table: remove every live file and
+        add its rows. ``txn_state`` rides in the SAME entry as the data
+        and the txn version — source-specific resume state (e.g. a
         partitioned log's per-partition offset vector) gets the same
         exactly-once guarantee as the scalar position."""
-        meta = self.prepare_snapshot(df, txn_app_id, txn_version,
-                                     txn_state, sized=sized)
-        self._write_pointer(meta)
-        return meta["version"]
+        return self.commit(self.prepare_snapshot(
+            df, txn_app_id, txn_version, txn_state, sized=sized,
+            partition_by=partition_by))
+
+    def overwrite_pruned(self, add: DataFrame | None = None,
+                         deletes: dict | None = None) -> int:
+        """Row-level commit: rewrite only the rows a statement touched —
+        ``add``'s rows become a new data file and ``deletes`` (FILE_COL
+        value -> row positions, as a positioned ``read`` reports them)
+        join the deletion vectors. Applies the compaction rule."""
+        entry = self.prepare_snapshot(add, replace=False, deletes=deletes)
+        for a in entry["add"]:
+            a["delta"] = True  # counted by the compaction rule
+        v = self.commit(entry)
+        st = self._state()
+        delta = {p for p, f_ in st["files"].items() if f_.get("delta")}
+        if (len(delta) > FOLD_FILES
+                or sum(len(d) for d in st["dv"].values()) > MAX_DV_ROWS):
+            v = self._fold(st, delta | set(st["dv"]))
+        return v
+
+    def _fold(self, st: dict, paths: set[str]) -> int:
+        """Rewrite the live rows of ``paths`` into fresh files that
+        carry no deletion vector; every other file stays as it is."""
+        sub = dict(st, files={p: st["files"][p] for p in paths},
+                   dv={p: d for p, d in st["dv"].items() if p in paths})
+        entry = self.prepare_snapshot(self._read_snapshot(sub),
+                                      replace=False)
+        entry.update(op="fold", remove=sorted(paths))
+        return self.commit(entry)
+
+    def append(self, df: DataFrame) -> int:
+        """INSERT: commit ``df``'s rows as one more data file. The rows
+        take the table's column types; when ``base.unionByName(df)``
+        would widen a column instead, the table is rewritten with the
+        widened schema, as a union write always did. Appending to a
+        table with no version creates it."""
+        if not self.exists():
+            return self.overwrite(df)
+        base = self.read()
+        union = base.unionByName(df)
+        if ([(f_.name, f_.dataType) for f_ in union.schema.fields]
+                != [(f_.name, f_.dataType) for f_ in base.schema.fields]):
+            return self.overwrite(union)
+        return self.overwrite_pruned(df.select(*[
+            F.col(f_.name).cast(f_.dataType) for f_ in base.schema.fields]))
+
+    def restore(self, version: int) -> int:
+        """Roll back by appending an entry that restores ``version``'s
+        files, deletion vectors, schema and txn marks."""
+        st, old = self._state(), self.state_at(version)
+        entry = {k: old[k] for k in _META_KEYS}
+        entry.update(
+            version=st["version"] + 1, commit=uuid.uuid4().hex,
+            op="restore", remove=sorted(st["files"]),
+            add=[{"path": p, **f_} for p, f_ in sorted(old["files"].items())],
+            dv=dict(old["dv"]))
+        return self.commit(entry)
 
     def last_txn_version(self, txn_app_id: str) -> int:
-        return self._read_pointer().get("txn", {}).get(txn_app_id, -1)
+        return self._state()["txn"].get(txn_app_id, -1)
 
     def last_txn_state(self, txn_app_id: str) -> dict | None:
         """Source-specific resume state committed alongside the last
         txn version (see overwrite)."""
-        return self._read_pointer().get("txn_state", {}).get(txn_app_id)
-
-    def data_files(self, version: int | None = None) -> list[str]:
-        """Relative paths of a snapshot's parquet data files (hive
-        partition subdirs included)."""
-        v = self.version if version is None else version
-        base = os.path.join(self.dir, f"v{v}")
-        out: list[str] = []
-        for r, _, fs in os.walk(base):
-            for f in fs:
-                if f.endswith(".parquet"):
-                    out.append(os.path.relpath(os.path.join(r, f), base))
-        return out
-
-    def snapshot_dir(self, version: int | None = None) -> str:
-        v = self.version if version is None else version
-        return os.path.join(self.dir, f"v{v}")
-
-    def overwrite_pruned(
-        self,
-        new_rows: DataFrame,
-        carry_files: list[str],
-        txn_app_id: str | None = None,
-        txn_version: int | None = None,
-    ) -> int:
-        """Pruned snapshot commit: materialize only ``new_rows`` (the
-        recomputed content of the files a DML statement actually
-        touched) and carry every path in ``carry_files`` (relative to
-        the current snapshot) into the new version by hard link, with
-        a copy fallback. Data files are immutable, so link-sharing
-        across versions is safe — the same unchanged-AddFile reuse a
-        Delta commit performs, expressed on the versioned-pointer
-        layout. At 100 TB this turns a 10-row UPDATE from a full-table
-        rewrite into one file write plus O(files) link syscalls."""
-        import shutil
-
-        meta = self._read_pointer()
-        cur_v = meta["version"]
-        new_v = cur_v + 1
-        parts = meta.get("partition_by")
-        w = _sized_for_write(new_rows).write.mode("overwrite")
-        meta["schema_json"] = new_rows.schema.json()
-        if parts:
-            missing = [c for c in parts if c not in new_rows.columns]
-            if missing:
-                raise ValueError(f"partition columns missing: {missing}")
-            w = w.partitionBy(*parts)
-        new_dir = os.path.join(self.dir, f"v{new_v}")
-        w.parquet(new_dir)
-        src_base = os.path.join(self.dir, f"v{cur_v}")
-        for rel in carry_files:
-            src = os.path.join(src_base, rel)
-            dst = os.path.join(new_dir, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
-        if txn_app_id is not None:
-            meta.setdefault("txn", {})[txn_app_id] = txn_version
-        meta["version"] = new_v
-        self._write_pointer(meta)
-        return new_v
+        return self._state()["txn_state"].get(txn_app_id)
 
     def vacuum(self, keep_last: int = 1) -> int:
-        """Delete snapshot directories older than the newest `keep_last`
-        (the committed one always survives). Old versions exist for time
-        travel and in-flight readers — VACUUM is the retention knob, the
-        analog of Delta's VACUUM over our versioned-pointer layout.
-        Returns the number of version dirs removed.
-        """
-        import shutil
-
+        """Delete data files that none of the newest ``keep_last``
+        versions references: superseded files, and files a crash left
+        behind before their entry was committed. Old versions exist for
+        time travel and in-flight readers — VACUUM is the retention
+        knob, the analog of Delta's VACUUM. Returns the number of data
+        files removed."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         cur = self.version
         if cur < 0:
             return 0
+        keep: set[str] = set()
+        st = _EMPTY
+        for n in range(cur + 1):
+            st = _replay(st, self.entry(n))
+            if n > cur - keep_last:
+                keep.update(st["files"])
         removed = 0
-        cutoff = cur - keep_last + 1
         for d in os.listdir(self.dir):
-            if not d.startswith("v"):
+            full = os.path.join(self.dir, d)
+            if not (d.startswith("d") and os.path.isdir(full)):
                 continue
-            try:
-                v = int(d[1:])
-            except ValueError:
-                continue
-            # v > cur is PREPARED-but-never-committed garbage (a crash
-            # before a multi-table commit's journal record): the
-            # pointer never referenced it, safe to reclaim. There is no
-            # in-flight prepare to race with in a single-writer engine.
-            if v < cutoff or v > cur:
-                shutil.rmtree(os.path.join(self.dir, d), ignore_errors=True)
-                removed += 1
+            live = False
+            for r, _, fs in os.walk(full):
+                for f in fs:
+                    if f.startswith((".", "_")) or not f.endswith(".parquet"):
+                        continue
+                    if os.path.relpath(os.path.join(r, f), self.dir) in keep:
+                        live = True
+                        continue
+                    os.remove(os.path.join(r, f))
+                    removed += 1
+            if not live:
+                shutil.rmtree(full, ignore_errors=True)
         return removed
+
+    def checkpoint_entry(self) -> dict:
+        """The current state as a self-contained entry 0: a backup's
+        whole log, which adds every live file."""
+        st = self._state()
+        entry = {k: st[k] for k in _META_KEYS}
+        entry.update(
+            version=0, commit=uuid.uuid4().hex, op="write", remove=[],
+            add=[{"path": p, **f_} for p, f_ in sorted(st["files"].items())],
+            dv=dict(st["dv"]))
+        return entry
 
     # ----------------------------------------------------------- optimize
     def optimize(
@@ -471,21 +658,22 @@ class ParquetTable:
         return True
 
 
+
 class Catalog:
-    """Flat namespace of versioned parquet tables under one root."""
+    """Flat namespace of log-structured parquet tables under one root."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self._read_cache: dict = {}
-        self._count_cache: dict = {}
+        self._states: dict = {}
         os.makedirs(root, exist_ok=True)
         self._recover_multi_txns()
 
     def table(self, name: str) -> ParquetTable:
         return ParquetTable(self.spark, self.root, name,
                             read_cache=self._read_cache,
-                            count_cache=self._count_cache)
+                            states=self._states)
 
     # ------------------------------------------- atomic multi-table commit
     @property
@@ -493,17 +681,23 @@ class Catalog:
         return os.path.join(self.root, "_TXNLOG")
 
     def commit_multi(self, prepared: dict[str, dict]) -> None:
-        """Flip N table pointers as ONE transaction.
+        """Commit N tables' prepared entries as ONE transaction.
 
         The journal record (written with an atomic rename) is the
         commit point — redo logging: a crash BEFORE the record exists
-        leaves every pointer untouched (prepared v{N} dirs are garbage);
-        a crash AFTER it is completed by ``_recover_multi_txns`` on the
-        next Catalog open. At every observable version the N tables
-        move together — the reference applies a whole flush (data for
-        all tables + the replication position) in one transaction
-        (delta/controller.go:75-190, binlog_replica_applier.go:786-812).
+        leaves every log untouched (the prepared data files are
+        garbage for vacuum); a crash AFTER it is completed by
+        ``_recover_multi_txns`` on the next Catalog open. At every
+        observable version the N tables move together — the reference
+        applies a whole flush (data for all tables + the replication
+        position) in one transaction (delta/controller.go:75-190,
+        binlog_replica_applier.go:786-812).
         """
+        for name, entry in prepared.items():
+            if self.table(name).version >= entry["version"]:
+                raise CommitConflictError(
+                    f"{name}: version {entry['version']} was committed "
+                    "by another writer")
         os.makedirs(self._txnlog_dir, exist_ok=True)
         seq = len(os.listdir(self._txnlog_dir))
         path = os.path.join(self._txnlog_dir, f"txn-{seq:09d}.json")
@@ -514,16 +708,21 @@ class Catalog:
         self._apply_multi_txn(path, {"tables": prepared})
 
     def _apply_multi_txn(self, path: str, rec: dict) -> None:
-        for name, meta in rec["tables"].items():
+        for name, entry in rec["tables"].items():
             t = self.table(name)
-            # idempotent redo: skip pointers already at/after the target
-            if t.version < meta["version"]:
-                t._write_pointer(meta)
+            try:
+                t.commit(entry)
+            except CommitConflictError:
+                # idempotent redo: the entry this record journaled is
+                # already there
+                if t.entry(entry["version"])["commit"] != \
+                        entry["commit"]:
+                    raise
         os.remove(path)
 
     def _recover_multi_txns(self) -> None:
         """Roll forward any journaled-but-unapplied multi-table commits
-        (crash between the journal write and the last pointer flip)."""
+        (crash between the journal write and the last entry write)."""
         d = self._txnlog_dir
         if not os.path.isdir(d):
             return
@@ -549,9 +748,10 @@ class Catalog:
         txn_state: dict | None = None,
     ) -> bool:
         """Condense + apply one CDC flush spanning N tables, committed
-        as ONE atomic pointer-swap transaction (both-or-neither across
-        crash). Idempotent under (app_id, version) markers, which land
-        on every participating table; returns False on re-delivery.
+        as ONE atomic transaction of N log entries (both-or-neither
+        across crash). Idempotent under (app_id, version) markers,
+        which land on every participating table; returns False on
+        re-delivery.
         """
         if (
             txn_app_id is not None
@@ -579,8 +779,8 @@ class Catalog:
                 snap, txn_app_id, txn_version, txn_state
             )
 
-        # the N prepare writes are independent (disjoint version dirs,
-        # pointer flip deferred to commit_multi) — overlap them so one
+        # the N prepare writes are independent (disjoint data dirs,
+        # entries deferred to commit_multi) — overlap them so one
         # table's write tail back-fills the other's (guide §2.6);
         # sequential when there is only one.
         if len(batches) == 1:
@@ -601,9 +801,7 @@ class Catalog:
         t = self.table(name)
         existed = t.exists()
         try:
-            if partition_by:
-                t.set_partitioning(partition_by)
-            t.overwrite(df)
+            t.overwrite(df, partition_by=partition_by)
         except BaseException:
             # a half-created table directory must not survive — it
             # poisons every later all-table scan
@@ -615,23 +813,17 @@ class Catalog:
     def list_tables(self) -> list[str]:
         return sorted(
             d for d in os.listdir(self.root)
-            if os.path.isdir(os.path.join(self.root, d))
-            and os.path.exists(os.path.join(self.root, d, "_VERSION"))
+            if os.path.exists(os.path.join(self.root, d, "_log", "0.json"))
         )
 
     def evict_read_cache(self, name: str) -> None:
-        """Drop memoized read plans for a table. Needed whenever the
-        name can be re-bound at a previously-seen version number
-        (drop+recreate restarts versions at 0; restore/rename adopt
-        foreign version dirs)."""
+        """Forget a table's replayed state and read plans (its
+        directory was dropped, renamed or replaced)."""
+        self._states.pop(name, None)
         for k in [k for k in self._read_cache if k[0] == name]:
             self._read_cache.pop(k, None)
-        for k in [k for k in self._count_cache if k[0] == name]:
-            self._count_cache.pop(k, None)
 
     def drop_table(self, name: str) -> None:
-        import shutil
-
         self.evict_read_cache(name)
         shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
@@ -643,20 +835,20 @@ class Catalog:
     def backup_table(self, name: str, dest_root: str) -> str:
         """BACKUP DATABASE parity (reference pgserver/backup_handler.go:
         14-90 copies the storage file to object storage): deep-copy the
-        current snapshot + pointer. On S3 this is a parallel object
-        copy of immutable files."""
-        import shutil
-
+        live data files plus a one-entry log that adds them. On S3 this
+        is a parallel object copy of immutable files."""
         t = self.table(name)
-        meta = t._read_pointer()
-        if meta["version"] < 0:
+        if not t.exists():
             raise FileNotFoundError(f"no snapshot to back up: {name}")
+        entry = t.checkpoint_entry()
         dest = os.path.join(dest_root, name)
-        os.makedirs(dest, exist_ok=True)
-        src_v = os.path.join(t.dir, f"v{meta['version']}")
-        shutil.copytree(src_v, os.path.join(dest, f"v{meta['version']}"),
-                        dirs_exist_ok=True)
-        shutil.copy2(t._pointer_path, os.path.join(dest, "_VERSION"))
+        shutil.rmtree(os.path.join(dest, "_log"), ignore_errors=True)
+        for a in entry["add"]:
+            os.makedirs(os.path.dirname(os.path.join(dest, a["path"])),
+                        exist_ok=True)
+            shutil.copy2(os.path.join(t.dir, a["path"]),
+                         os.path.join(dest, a["path"]))
+        ParquetTable(self.spark, dest_root, name).commit(entry)
         return dest
 
     def backup_table_uri(
@@ -674,8 +866,8 @@ class Catalog:
         storage/object_storage.go:33-128). Spark's equivalent transport
         is the Hadoop FileSystem API: s3a:// (or any installed scheme)
         with per-session fs.s3a.* credentials; file:// exercises the
-        identical code path locally. Copies the current snapshot
-        directory + pointer; parquet files are immutable so the copy is
+        identical code path locally. Copies the live data files plus a
+        one-entry log; parquet files are immutable so the copy is
         consistent without locking.
         """
         spark = self.spark
@@ -691,25 +883,23 @@ class Catalog:
         fs = jvm.org.apache.hadoop.fs.FileSystem.get(juri, hconf)
         Path = jvm.org.apache.hadoop.fs.Path
         t = self.table(name)
-        meta = t._read_pointer()
-        if meta["version"] < 0:
+        if not t.exists():
             raise FileNotFoundError(f"no snapshot to back up: {name}")
-        vdir = f"v{meta['version']}"
-        src_v = os.path.join(t.dir, vdir)
+        entry = t.checkpoint_entry()
         dest_base = dest_uri.rstrip("/") + f"/{name}"
-        fs.mkdirs(Path(f"{dest_base}/{vdir}"))
-        for f in sorted(os.listdir(src_v)):
+        fs.delete(Path(f"{dest_base}/_log"), True)
+        for a in entry["add"]:
             fs.copyFromLocalFile(
-                False,
-                True,
-                Path("file://" + os.path.join(src_v, f)),
-                Path(f"{dest_base}/{vdir}/{f}"),
+                False, True,
+                Path("file://" + os.path.join(t.dir, a["path"])),
+                Path(f"{dest_base}/{a['path']}"),
             )
-        fs.copyFromLocalFile(
-            False, True,
-            Path("file://" + t._pointer_path),
-            Path(f"{dest_base}/_VERSION"),
-        )
+        with tempfile.TemporaryDirectory() as tmp:
+            log0 = os.path.join(tmp, "0.json")
+            with open(log0, "w") as f:
+                json.dump(entry, f)
+            fs.copyFromLocalFile(False, True, Path("file://" + log0),
+                                 Path(f"{dest_base}/_log/0.json"))
         meta_path = os.path.join(t.dir, "_META")
         if os.path.exists(meta_path):
             fs.copyFromLocalFile(
@@ -729,7 +919,7 @@ class Catalog:
         """BACKUP DATABASE … TO '<uri>': the reference copies the WHOLE
         database file to object storage (pgserver/backup_handler.go
         'BACKUP DATABASE my_database TO s3://…'). Here that is every
-        table's current snapshot + pointer (backup_table_uri) plus the
+        table's live files + one-entry log (backup_table_uri) plus the
         warehouse metadata sidecars (__procedures/__triggers/__events/
         __users/__macros/__replication .json) under __meta/ — a restore
         brings the routines back, not just the rows."""
@@ -810,10 +1000,8 @@ class Catalog:
         juri = jvm.java.net.URI(src_base)
         fs = jvm.org.apache.hadoop.fs.FileSystem.get(juri, hconf)
         Path = jvm.org.apache.hadoop.fs.Path
-        import shutil
-
         dest = os.path.join(self.root, name)
-        shutil.rmtree(dest, ignore_errors=True)
+        self.drop_table(name)
         os.makedirs(dest, exist_ok=True)
         # Path.toString() normalizes schemes (file:// -> file:/), so
         # compute relative paths from URI *paths*, not string prefixes.
@@ -834,10 +1022,7 @@ class Catalog:
 
     def restore_table(self, name: str, backup_root: str) -> ParquetTable:
         """RESTORE DATABASE parity: adopt a backed-up snapshot."""
-        import shutil
-
         src = os.path.join(backup_root, name)
-        dest = os.path.join(self.root, name)
-        shutil.rmtree(dest, ignore_errors=True)
-        shutil.copytree(src, dest)
+        self.drop_table(name)
+        shutil.copytree(src, os.path.join(self.root, name))
         return self.table(name)

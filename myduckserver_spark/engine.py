@@ -28,7 +28,13 @@ from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
 from myduckserver_spark import statements as st
-from myduckserver_spark.catalog import Catalog, ParquetTable
+from myduckserver_spark.catalog import (
+    FILE_COL,
+    MAX_DV_ROWS,
+    POS_COL,
+    Catalog,
+    ParquetTable,
+)
 from myduckserver_spark.frames import local_frame
 from myduckserver_spark.functions.mysql_compat import translate_mysql
 from myduckserver_spark.types import schema_from_mysql, spark_to_mysql
@@ -686,11 +692,11 @@ class Engine:
         return db, stripped
 
     def _refresh_views(self) -> None:
-        # Temp views pin a concrete snapshot path, so they must be
-        # re-registered when a table's pointer moves — but re-reading
-        # EVERY table per query is O(tables) Py4J round-trips. Compare
-        # (database, committed version) per view name (cheap local
-        # _VERSION reads) and refresh only what changed: after a USE,
+        # Temp views pin a concrete list of data files, so they must be
+        # re-registered when a table commits — but re-reading EVERY
+        # table per query is O(tables) Py4J round-trips. Compare
+        # (database, committed version) per view name (cheap local log
+        # stats) and refresh only what changed: after a USE,
         # a name that exists in both databases at the same version
         # must still re-bind to the current database's table.
         registered = getattr(self, "_registered_versions", {})
@@ -974,7 +980,7 @@ class Engine:
         if getattr(self, "_txn_snapshot", None) is not None:
             # Inside an open transaction DROP is deferred-destructive:
             # the table directory moves to txn trash so ROLLBACK can
-            # restore it wholesale (data versions, pointer, meta). The
+            # restore it wholesale (data files, log, meta). The
             # reference bridges the same contract through DuckDB's txn
             # (backend/session.go:87-143).
             import shutil
@@ -1145,7 +1151,7 @@ class Engine:
                  if f.name in casts else F.col(f.name))
                 for f in df.schema.fields
             ])
-        t.overwrite(base.unionByName(df))
+        t.append(df)
 
     def insert_with_defaults(
         self, name: str, df: DataFrame, defaults: dict[str, object] | None = None
@@ -1163,7 +1169,7 @@ class Engine:
                     field.name,
                     F.lit(defaults.get(field.name)).cast(field.dataType),
                 )
-        t.overwrite(base.unionByName(out.select(*base.columns)))
+        t.append(out.select(*base.columns))
 
     def insert_auto_increment(
         self, name: str, df: DataFrame, id_col: str
@@ -1181,7 +1187,7 @@ class Engine:
         start = self._ai_start(name, base, id_col)
         id_type = dict(base.dtypes)[id_col]
         numbered = self._assign_dense_ids(df, id_col, start, id_type)
-        t.overwrite(base.unionByName(numbered.select(*base.columns)))
+        t.append(numbered.select(*base.columns))
         # returned so AFTER INSERT triggers see the assigned ids in
         # NEW.<auto_col> (MySQL exposes the assigned id in NEW); the
         # plan depends only on df+start, so re-evaluation after the
@@ -1366,7 +1372,7 @@ class Engine:
                     # them (standard join never matches NULLs anyway)
                     basek = basek.where(self._nonnull(cols))
                 fresh = fresh.join(basek, cols, "left_anti")
-            t.overwrite(base.unionByName(fresh.select(*base.columns)))
+            t.append(fresh.select(*base.columns))
             return
 
         # sequential chains: resolve survival greedily over (position,
@@ -1423,50 +1429,7 @@ class Engine:
         fresh = ordered.where(
             F.col("__ord").isin(survivors) if survivors else F.lit(False)
         ).drop("__ord")
-        t.overwrite(base.unionByName(fresh.select(*base.columns)))
-
-    def _pruned_scan_from_condition(self, t, base: DataFrame, condition):
-        """(touched_files_df, carry_files) for a file-pruned DML
-        rewrite, or None when pruning can't help. Exact pruning: the
-        files that actually produced matching rows (input_file_name()
-        over the filtered scan — the WHERE pushes down, so a
-        partition/minmax-prunable predicate only ever opens the
-        candidate files) are re-read; every other file is carried into
-        the next snapshot by link (catalog.overwrite_pruned). The
-        collect is bounded by the snapshot's file count."""
-        import urllib.parse
-
-        all_files = t.data_files()
-        if len(all_files) <= 1:
-            return None
-        base_dir = t.snapshot_dir()
-        rows = (
-            base.filter(condition)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .limit(self._PRUNE_MAX_TOUCHED_FILES + 1)
-            .collect()
-        )
-        if len(rows) > self._PRUNE_MAX_TOUCHED_FILES:
-            return None
-        touched: set[str] = set()
-        for r in rows:
-            p = urllib.parse.unquote(urllib.parse.urlparse(r.f).path)
-            if not p.startswith(base_dir + os.sep):
-                return None
-            touched.add(os.path.relpath(p, base_dir))
-        if len(touched) >= len(all_files):
-            return None
-        carry = [f for f in all_files if f not in touched]
-        if touched:
-            df = (
-                self.spark.read.option("basePath", base_dir)
-                .parquet(*[os.path.join(base_dir, f) for f in sorted(touched)])
-                .select(*base.columns)
-            )
-        else:
-            df = base.limit(0)
-        return df, carry
+        t.append(fresh.select(*base.columns))
 
     @staticmethod
     def _unique_key_list(meta, cols_available=None):
@@ -1561,21 +1524,19 @@ class Engine:
                 raise DuplicateKeyError(key, f"{table}.{iname}")
 
     def update(self, name: str, condition: Column, assignments: dict[str, Column]) -> int:
-        """UPDATE t SET col=expr WHERE cond, as a snapshot rewrite.
-        CHECK/NOT NULL constraints are enforced on the post-update
-        snapshot — MySQL rejects constraint-violating UPDATEs exactly
-        like INSERTs (same GMS-layer rule the insert path applies).
+        """UPDATE t SET col=expr WHERE cond. CHECK/NOT NULL constraints
+        are enforced on the post-image — MySQL rejects constraint-
+        violating UPDATEs exactly like INSERTs (same GMS-layer rule the
+        insert path applies).
 
-        A predicate that touches a subset of the snapshot's files
-        rewrites ONLY those files; the rest carry over by link
-        (file-pruned rewrite — at 100 TB a 10-row UPDATE must not
-        rewrite every partition). Falls back to the full rewrite when
-        the condition/assignment Columns are bound to another plan, an
-        assignment rewrites a hive-partition column (rows could move
-        between partition dirs), or every file is touched."""
+        The matched rows commit row by row (their positions join the
+        deletion vectors, their post-images become one new file), so a
+        10-row UPDATE writes 10 rows at any table size. The whole table
+        is rewritten instead when an assignment changes a key column
+        (uniqueness is a GLOBAL property, so the post-image check must
+        see every row) or a column type, when more than MAX_DV_ROWS
+        rows match, or when the Columns are bound to another plan."""
         t = self.catalog.table(name)
-        base = t.read()
-        n = base.filter(condition).count()
 
         def transform(df: DataFrame) -> DataFrame:
             return df.withColumns(
@@ -1587,28 +1548,50 @@ class Engine:
 
         meta = self.table_meta(name)
         key_targets = self._unique_targets(meta, set(assignments))
-        parts = set(t._read_pointer().get("partition_by") or ())
-        # a key assignment forces the full rewrite: uniqueness is a
-        # GLOBAL property, so the post-image check must see every row
-        if not (set(assignments) & parts) and not key_targets:
+        if not key_targets:
             try:
-                pruned = self._pruned_scan_from_condition(t, base, condition)
-                if pruned is not None:
-                    touched_df, carry = pruned
-                    updated = transform(touched_df)
-                    self._enforce_checks(
-                        updated, self.table_meta(name), "UPDATE"
-                    )
-                    t.overwrite_pruned(updated, carry)
-                    return n
+                got = self._matched_rows(
+                    t, transform(t.read(positioned=True).filter(condition)))
             except AnalysisException:
-                pass  # plan-bound Columns: full rewrite below
+                got = None  # plan-bound Columns: full rewrite below
+            if got is not None:
+                post, deletes, n = got
+                self._enforce_checks(post, meta, "UPDATE")
+                if n:
+                    t.overwrite_pruned(post, deletes)
+                return n
+        base = t.read()
+        n = base.filter(condition).count()
         updated = transform(base)
         self._enforce_checks(updated, meta, "UPDATE")
         if key_targets:
             self._enforce_unique_post(updated, key_targets, name)
         t.overwrite(updated)
         return n
+
+    def _matched_rows(self, t: ParquetTable, matched: DataFrame,
+                      images: bool = True):
+        """(post-image frame, deletes, n) for a row-level DML commit:
+        ``matched`` is a positioned read of the rows a statement
+        touches, holding their post-images in the table's column types
+        when ``images`` is set (else only FILE_COL and POS_COL). None
+        when more than MAX_DV_ROWS rows match (the bound is applied
+        before anything reaches the driver) or when the post-image
+        would change a column type."""
+        schema = t.read().schema
+        if images and [(f.name, f.dataType)
+                       for f in matched.schema.fields[:-2]] != \
+                [(f.name, f.dataType) for f in schema.fields]:
+            return None
+        rows = self._collect_capped(matched, MAX_DV_ROWS + 1)
+        if len(rows) > MAX_DV_ROWS:
+            return None
+        deletes: dict[str, list[int]] = {}
+        for r in rows:
+            deletes.setdefault(r[FILE_COL], []).append(r[POS_COL])
+        post = local_frame(self.spark, [tuple(r)[:-2] for r in rows],
+                           schema) if images else None
+        return post, deletes, len(rows)
 
     def _enforce_checks(
         self, df: DataFrame, meta: "st.TableMeta", context: str
@@ -1650,20 +1633,24 @@ class Engine:
                 )
 
     def delete(self, name: str, condition: Column) -> int:
+        """DELETE: the matched rows' positions join the deletion
+        vectors (no data file is written); a full rewrite when more
+        than MAX_DV_ROWS rows match or the condition Column is bound
+        to another plan."""
         t = self.catalog.table(name)
+        try:
+            got = self._matched_rows(
+                t, t.read(positioned=True).filter(condition)
+                .select(FILE_COL, POS_COL), images=False)
+        except AnalysisException:
+            got = None  # plan-bound condition Column: full rewrite below
+        if got is not None:
+            _post, deletes, n = got
+            if n:
+                t.overwrite_pruned(deletes=deletes)
+            return n
         base = t.read()
         n = base.filter(condition).count()
-        try:
-            pruned = self._pruned_scan_from_condition(t, base, condition)
-            if pruned is not None:
-                touched_df, carry = pruned
-                t.overwrite_pruned(
-                    touched_df.filter(~condition | condition.isNull()),
-                    carry,
-                )
-                return n
-        except AnalysisException:
-            pass  # plan-bound condition Column: full rewrite below
         t.overwrite(base.filter(~condition | condition.isNull()))
         return n
 
@@ -2173,7 +2160,7 @@ class Engine:
     # HOST pumps via replica_poll() — the same honest host-owns-timing
     # split as run_event(). Config persists like the reference's
     # binlog_metadata_persistence.go; positions live in the table
-    # pointers (exactly-once markers), so restart resumes correctly.
+    # logs (exactly-once markers), so restart resumes correctly.
 
     def _replication_path(self) -> str:
         return os.path.join(self._warehouse, "__replication.json")
@@ -4122,67 +4109,36 @@ class Engine:
         return self._pk_membership_sql(
             pks, [tuple(r) for r in rows], qual=qual)
 
-    # Above this many touched files the pruned rewrite stops paying
-    # for itself (link bookkeeping + per-file scan setup) and the plain
-    # whole-snapshot rewrite is simpler; DML that touches thousands of
-    # files is a bulk rewrite anyway.
-    _PRUNE_MAX_TOUCHED_FILES = 4096
-
     # Driver-side sequential chain walks (INSERT IGNORE / UPDATE
     # IGNORE / ON DUPLICATE KEY intra-batch resolution) are bounded
     # like cursors; the cap is enforced BEFORE materialization via
     # limit(cap+1).
     _CHAIN_WALK_CAP = 100_000
 
-    def _pruned_dml_plan(
-        self, table: str, pre: str, where: str, dialect: str
-    ):
-        """File-pruned DML rewrite plan: find which data files of the
-        current snapshot actually hold rows matching ``where`` (exact,
-        via input_file_name() on the matched rows — sharper than
-        min/max pruning and partition-layout agnostic) and return
-        (scan_view_name, carry_files): a temp view over ONLY the
-        touched files plus the relative paths to carry over by link
-        (catalog.overwrite_pruned). None = pruning can't help (single
-        file, every file touched, or an unexpected path); callers fall
-        back to the full-snapshot rewrite. The file-list collect is
-        bounded by the snapshot's file count (itself bounded by the
-        write parallelism), never by row count."""
-        import urllib.parse
+    def _collect_capped(self, df: DataFrame, cap: int) -> list:
+        """At most ``cap`` rows of ``df``, as ONE job over all of its
+        partitions. A plain ``limit().collect()`` scans one partition
+        first and then launches more jobs until it has ``cap`` rows,
+        which a selective scan of a table in several files never has."""
+        key = "spark.sql.limit.initialNumPartitions"
+        conf = self.spark.conf
+        old = conf.get(key, None)
+        conf.set(key, str((1 << 31) - 1))
+        try:
+            return df.limit(cap).collect()
+        finally:
+            if old is None:
+                conf.unset(key)
+            else:
+                conf.set(key, old)
 
-        t = self.catalog.table(table)
-        all_files = t.data_files()
-        if len(all_files) <= 1:
-            return None
-        base = t.snapshot_dir()
-        rows = self.sql(
-            f"{pre}SELECT DISTINCT input_file_name() AS f FROM `{table}` "
-            f"WHERE coalesce(({where}), false)",
-            dialect=dialect,
-        ).limit(self._PRUNE_MAX_TOUCHED_FILES + 1).collect()
-        if len(rows) > self._PRUNE_MAX_TOUCHED_FILES:
-            return None
-        touched: set[str] = set()
-        for r in rows:
-            p = urllib.parse.unquote(urllib.parse.urlparse(r.f).path)
-            if not p.startswith(base + os.sep):
-                return None
-            touched.add(os.path.relpath(p, base))
-        if len(touched) >= len(all_files):
-            return None
-        carry = [f for f in all_files if f not in touched]
-        cols = [f.name for f in t.read().schema.fields]
-        if touched:
-            df = (
-                self.spark.read.option("basePath", base)
-                .parquet(*[os.path.join(base, f) for f in sorted(touched)])
-                .select(*cols)
-            )
-        else:
-            df = t.read().limit(0)
-        view = f"__dml_pruned_{table}"
-        df.createOrReplaceTempView(view)
-        return view, carry
+    def _positioned_view(self, table: str) -> str:
+        """A temp view over the table's live rows plus FILE_COL and
+        POS_COL (see ParquetTable.read), for SQL-text row-level DML."""
+        view = f"__dml_pos_{table}"
+        self.catalog.table(table).read(positioned=True) \
+            .createOrReplaceTempView(view)
+        return view
 
     def _narrow_ignore_key_conflicts(
         self, table: str, pre: str, where: str,
@@ -4425,11 +4381,26 @@ class Engine:
                 )
             else:
                 sel.append(f"`{f.name}`")
-        n = self.sql(
-            f"{pre}SELECT count(*) AS n FROM `{s.table}` "
-            f"WHERE coalesce(({where}), false)",
-            dialect=dialect,
-        ).collect()[0][0]
+        # row-level commit of the matched rows unless an assignment
+        # changes a key: uniqueness is a GLOBAL property, so the
+        # post-image check must see every row
+        key_targets = self._unique_targets(meta, set(assignments))
+        got = None
+        if not key_targets:
+            got = self._matched_rows(t, self.sql(
+                f"{pre}SELECT {', '.join(sel)}, {FILE_COL}, {POS_COL} "
+                f"FROM {self._positioned_view(s.table)} AS `{s.table}` "
+                f"WHERE coalesce(({where}), false)",
+                dialect=dialect,
+            ))
+        if got is not None:
+            n = got[2]
+        else:
+            n = self.sql(
+                f"{pre}SELECT count(*) AS n FROM `{s.table}` "
+                f"WHERE coalesce(({where}), false)",
+                dialect=dialect,
+            ).collect()[0][0]
         # AFTER UPDATE triggers: one pass builds BOTH images perfectly
         # row-paired (old_* = stored values, new_* = the CASE
         # assignments), materialized before the overwrite swaps files.
@@ -4450,25 +4421,12 @@ class Engine:
                 f"WHERE coalesce(({where}), false)",
                 dialect=dialect,
             ).localCheckpoint()
-        # Pruned rewrite unless an assignment rewrites a hive-partition
-        # column (rows could move between partition directories — the
-        # full rewrite handles relocation).
-        parts = set(t._read_pointer().get("partition_by") or ())
-        # a key assignment forces the full rewrite: uniqueness is a
-        # GLOBAL property, so the post-image check must see every row
-        key_targets = self._unique_targets(meta, set(assignments))
-        pruned = None
-        if not (set(assignments) & parts) and not key_targets:
-            pruned = self._pruned_dml_plan(s.table, pre, where, dialect)
-        if pruned is not None:
-            view, carry = pruned
-            updated = self.sql(
-                f"{pre}SELECT {', '.join(sel)} FROM {view} AS `{s.table}`",
-                dialect=dialect,
-            )
-            self._enforce_checks(updated, meta, "UPDATE")
+        if got is not None:
+            post, deletes, _n = got
+            self._enforce_checks(post, meta, "UPDATE")
             self._run_trigger_stmts(before_stmts, trig_df)
-            t.overwrite_pruned(updated, carry)
+            if n:
+                t.overwrite_pruned(post, deletes)
         else:
             updated = self.sql(
                 f"{pre}SELECT {', '.join(sel)} FROM `{s.table}`",
@@ -4512,12 +4470,21 @@ class Engine:
                 ).collect()
                 if hit:
                     raise SignalError(sqlstate, msg)
-        n = self.sql(
-            f"{pre}SELECT count(*) AS n FROM `{s.table}` "
+        t = self.catalog.table(s.table)
+        got = self._matched_rows(t, self.sql(
+            f"{pre}SELECT {FILE_COL}, {POS_COL} "
+            f"FROM {self._positioned_view(s.table)} AS `{s.table}` "
             f"WHERE coalesce(({where}), false)",
             dialect=dialect,
-        ).collect()[0][0]
-        t = self.catalog.table(s.table)
+        ), images=False)
+        if got is not None:
+            n = got[2]
+        else:
+            n = self.sql(
+                f"{pre}SELECT count(*) AS n FROM `{s.table}` "
+                f"WHERE coalesce(({where}), false)",
+                dialect=dialect,
+            ).collect()[0][0]
         trig_df = None
         if before_stmts or self._triggers_for(s.table, "delete", "after"):
             trig_df = self._prefix_cols(
@@ -4528,22 +4495,14 @@ class Engine:
                 ), "old_",
             ).localCheckpoint()
         self._run_trigger_stmts(before_stmts, trig_df)
-        pruned = self._pruned_dml_plan(s.table, pre, where, dialect)
-        if pruned is not None:
-            view, carry = pruned
-            kept = self.sql(
-                f"{pre}SELECT * FROM {view} AS `{s.table}` "
-                f"WHERE NOT coalesce(({where}), false)",
-                dialect=dialect,
-            )
-            t.overwrite_pruned(kept, carry)
-        else:
-            kept = self.sql(
+        if got is None:
+            t.overwrite(self.sql(
                 f"{pre}SELECT * FROM `{s.table}` "
                 f"WHERE NOT coalesce(({where}), false)",
                 dialect=dialect,
-            )
-            t.overwrite(kept)
+            ))
+        elif n:
+            t.overwrite_pruned(deletes=got[1])
         self._fire_after_triggers(s.table, "delete", trig_df)
         return OkResult(affected_rows=int(n))
 
@@ -6507,7 +6466,7 @@ class Engine:
                 raise ValueError(f"unknown prepared statement: {s.name}")
             return OkResult(info="deallocated")
         if isinstance(s, st.CreateTable):
-            return self._exec_create_table(s)
+            return self._exec_create_table(s, dialect)
         if isinstance(s, st.CreateTableLike):
             if self.catalog.table(s.name).exists():
                 if s.if_not_exists:
@@ -6969,7 +6928,8 @@ class Engine:
         if isinstance(s, st.Vacuum):
             n = self.catalog.table(s.name).vacuum(keep_last=s.keep_last)
             return OkResult(
-                affected_rows=n, info=f"VACUUM {s.name}: {n} versions removed"
+                affected_rows=n,
+                info=f"VACUUM {s.name}: {n} data files removed"
             )
         if isinstance(s, st.BackupStmt):
             # a name matching a DATABASE backs up/restores the whole
@@ -7016,17 +6976,18 @@ class Engine:
     # ----------------------------------------------------------- transactions
     def _exec_txn(self, kind: str, name: str | None = None) -> OkResult:
         """BEGIN/COMMIT/ROLLBACK (+ SAVEPOINT / ROLLBACK TO / RELEASE)
-        over the versioned-pointer catalog.
+        over the log-structured catalog.
 
         The reference bridges MySQL transactions onto DuckDB's
-        (backend/session.go:87-143). Here every table snapshot is an
-        immutable version directory behind an atomic pointer
-        (catalog.py), so a transaction is a saved set of pointers plus
-        a DDL journal: ROLLBACK re-points every table at its BEGIN-time
-        version, restores BEGIN-time metadata (ALTER rollback), reverses
-        RENAMEs, resurrects DROPped tables from txn trash, and removes
-        tables created since. COMMIT purges the trash. A SAVEPOINT is
-        the same pointer/meta capture mid-transaction; ROLLBACK TO
+        (backend/session.go:87-143). Here every table version is
+        replayable from its append-only log (catalog.py), so a
+        transaction is a saved set of versions plus a DDL journal:
+        ROLLBACK appends to every table an entry restoring its
+        BEGIN-time version, restores BEGIN-time metadata (ALTER
+        rollback), reverses RENAMEs, resurrects DROPped tables from txn
+        trash, and removes tables created since. COMMIT purges the
+        trash. A SAVEPOINT is the same version/meta capture
+        mid-transaction; ROLLBACK TO
         restores it (and invalidates later savepoints) without ending
         the transaction. DDL is NOT rolled back by ROLLBACK TO
         SAVEPOINT — matching MySQL, where DDL implicitly commits.
@@ -7035,7 +6996,7 @@ class Engine:
 
         if kind == "begin":
             self._txn_snapshot = {
-                name_: self.catalog.table(name_)._read_pointer()
+                name_: self.catalog.table(name_).version
                 for name_ in self.catalog.list_tables()
             }
             self._txn_metas = {
@@ -7055,8 +7016,8 @@ class Engine:
                 )
                 return OkResult(info="no transaction: savepoint no-op")
             self._txn_savepoints[name] = {
-                "pointers": {
-                    n: self.catalog.table(n)._read_pointer()
+                "versions": {
+                    n: self.catalog.table(n).version
                     for n in self.catalog.list_tables()
                 },
                 "metas": {
@@ -7077,17 +7038,17 @@ class Engine:
                 raise ValueError(f"SAVEPOINT {name} does not exist")
             # DDL is NOT rolled back (MySQL: DDL implicitly commits):
             # tables created after the savepoint survive, tables dropped
-            # after it stay dropped — only DATA pointers + metadata of
+            # after it stay dropped — only DATA versions + metadata of
             # still-existing tables revert (ADVICE r2: the old code
             # dropped post-savepoint CREATEs and re-saved meta for
             # dropped tables, leaving orphan meta files).
             existing = set(self.catalog.list_tables())
-            for n, pointer in sp["pointers"].items():
+            for n, v in sp["versions"].items():
                 if n not in existing:
                     continue
                 t = self.catalog.table(n)
-                if t.exists() and t._read_pointer() != pointer:
-                    t._write_pointer(pointer)
+                if t.exists() and t.version != v:
+                    t.restore(v)
                 self._save_meta(n, sp["metas"][n])
             # later savepoints are invalidated (MySQL semantics)
             self._txn_savepoints = {
@@ -7122,11 +7083,11 @@ class Engine:
             if name not in snap:
                 self.catalog.drop_table(name)
                 self._meta_path_cleanup(name)
-        # 4. restore pointers + metadata
-        for name, pointer in snap.items():
+        # 4. restore versions + metadata
+        for name, v in snap.items():
             t = self.catalog.table(name)
-            if t.exists() and t._read_pointer() != pointer:
-                t._write_pointer(pointer)
+            if t.exists() and t.version != v:
+                t.restore(v)
             meta = self._txn_metas.get(name)
             if meta is not None:
                 self._save_meta(name, meta)
@@ -7305,7 +7266,8 @@ class Engine:
                     f"auto-increment column '{auto}' (MySQL 3109)"
                 )
 
-    def _exec_create_table(self, s: st.CreateTable) -> OkResult:
+    def _exec_create_table(self, s: st.CreateTable,
+                           dialect: str = "mysql") -> OkResult:
         if self.catalog.table(s.name).exists():
             if s.if_not_exists:
                 return OkResult(info="table exists")
@@ -7315,12 +7277,32 @@ class Engine:
             s.name, s.columns, partition_by=s.meta.partition_by or None
         )
         self._save_meta(s.name, s.meta)
-        return OkResult()
+        if s.query is None:
+            return OkResult()
+        # CREATE TABLE t (<columns, keys>) AS <query>: the query's
+        # columns fill the declared ones by name, through the INSERT
+        # path, so defaults, CHECKs and every key are enforced; a
+        # failing load leaves no table behind (MySQL CTAS is atomic)
+        try:
+            declared = {c.lower(): c for c, _ in s.columns}
+            cols = self.sql(s.query, dialect=dialect).columns
+            unknown = [c for c in cols if c.lower() not in declared]
+            if unknown:
+                raise ValueError(
+                    f"CREATE TABLE {s.name} ... SELECT: column(s) "
+                    f"{unknown} are not declared")
+            return self._exec_insert(st.Insert(
+                s.name, [declared[c.lower()] for c in cols], None,
+                s.query), dialect)
+        except BaseException:
+            self.catalog.drop_table(s.name)
+            self._ddl_changed()
+            raise
 
     def _exec_alter_multi(self, s: "st.AlterTableMulti") -> OkResult:
         """Comma-separated ALTER TABLE action list, applied in declared
         order with statement-level rollback: if any action fails the
-        table's snapshot pointer and metadata restore to the statement
+        table's data version and metadata restore to the statement
         start (MySQL 8 atomic DDL; the reference gets the list form
         from GMS). Parsing already validated every action, so pure
         syntax errors reject before any work."""
@@ -7328,7 +7310,7 @@ class Engine:
 
         t0 = self.catalog.table(s.name)
         t0.read()  # validates existence before any action runs
-        pointer = t0._read_pointer()
+        v0 = t0.version
         meta0 = copy.deepcopy(self.table_meta(s.name))
         cur = s.name
         try:
@@ -7342,8 +7324,8 @@ class Engine:
             if cur != s.name:
                 self.rename_table(cur, s.name)
             t = self.catalog.table(s.name)
-            if t._read_pointer() != pointer:
-                t._write_pointer(pointer)
+            if t.version != v0:
+                t.restore(v0)
             self._save_meta(s.name, meta0)
             self._ddl_changed()
             self._refresh_views()
@@ -7643,10 +7625,10 @@ class Engine:
             raise ValueError(f"unknown ALTER action: {s.action}")
         return OkResult()
 
-    @staticmethod
-    def _py_cast(v, dtype: T.DataType):
+    def _py_cast(self, v, dtype: T.DataType):
         """Cast a parsed literal to the Python value Spark expects for
-        `dtype` (local_frame is strict about row types)."""
+        `dtype` (local_frame is strict about row types), agreeing with
+        what `CAST(v AS dtype)` stores (the session has ANSI mode off)."""
         import datetime as dt
 
         if v is None:
@@ -7658,7 +7640,12 @@ class Engine:
         if isinstance(dtype, T.DecimalType):
             return decimal.Decimal(str(v))
         if isinstance(dtype, T.BooleanType):
-            return bool(v)
+            if not isinstance(v, str):
+                return bool(v)
+            # CAST(text AS BOOLEAN): these spellings, else NULL
+            return {"t": True, "true": True, "y": True, "yes": True,
+                    "1": True, "f": False, "false": False, "n": False,
+                    "no": False, "0": False}.get(v.strip().lower())
         if isinstance(dtype, T.StringType):
             return str(v)
         if isinstance(dtype, T.DateType):
@@ -7671,12 +7658,17 @@ class Engine:
                 return None
             return dt.date.fromisoformat(s)
         if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-            if isinstance(v, dt.datetime):
-                return v
-            s = str(v)
-            if s.startswith("0000-00-00"):
-                return None
-            return dt.datetime.fromisoformat(s)
+            if not isinstance(v, dt.datetime):
+                s = str(v)
+                if s.startswith("0000-00-00"):
+                    return None
+                v = dt.datetime.fromisoformat(s)
+            if isinstance(dtype, T.TimestampType) and v.tzinfo is None:
+                # wall-clock text names an instant in the SESSION zone,
+                # as CAST reads it; a naive datetime would be read in
+                # the process zone when the row is converted
+                v = v.replace(tzinfo=self._session_zone())
+            return v
         if isinstance(dtype, T.DayTimeIntervalType):
             # MySQL TIME is a signed duration up to ±838:59:59[.ffffff]
             # (reference maps it to INTERVAL, type_mapping.go:150-153)
@@ -7697,6 +7689,22 @@ class Engine:
         if isinstance(dtype, T.BinaryType):
             return v if isinstance(v, bytes) else str(v).encode()
         return v
+
+    def _session_zone(self):
+        import datetime as dt
+        import zoneinfo
+
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        try:
+            return zoneinfo.ZoneInfo(tz)
+        except (zoneinfo.ZoneInfoNotFoundError, ValueError):
+            # a fixed offset such as "+08:00"
+            m = re.fullmatch(r"(?:GMT|UTC)?([+-])(\d{1,2}):?(\d{2})?", tz)
+            if not m:
+                raise
+            off = dt.timedelta(hours=int(m.group(2)),
+                               minutes=int(m.group(3) or 0))
+            return dt.timezone(-off if m.group(1) == "-" else off)
 
     def _exec_insert(self, s: st.Insert, dialect: str) -> OkResult:
         t = self.catalog.table(s.table)
@@ -8923,7 +8931,10 @@ class Engine:
         candidates swap out by the same predicate that fetched them,
         final entity states union in. Bounded like cursors: the batch
         is capped BEFORE collect via limit(cap+1); candidate stored
-        rows are ≤ batch×levels by construction.
+        rows are ≤ batch×levels by construction. The candidates come
+        from a positioned read, so the commit is row-level: candidates
+        that changed or died are deleted by position and only changed
+        or inserted rows are written.
 
         Returns (affected, inserted_image, update_pairs)."""
         from functools import reduce as _reduce
@@ -8973,19 +8984,20 @@ class Engine:
             if preds is not None:
                 anyhit = F.coalesce(
                     _reduce(lambda a, b: a | b, preds), F.lit(False))
+        pos = t.read(positioned=True)
         if anyhit is not None:
-            cand_rows = base.filter(anyhit).limit(
-                cap * len(levels) + 1).collect()
+            cand_rows = self._collect_capped(
+                pos.filter(anyhit), cap * len(levels) + 1)
         else:
             cand = None
             for _iname, icols, nex in levels:
                 keys_df = df.select(*icols).distinct()
                 if nex:
                     keys_df = keys_df.where(self._nonnull(icols))
-                part = base.join(keys_df, icols, "left_semi")
+                part = pos.join(keys_df, icols, "left_semi")
                 cand = part if cand is None else cand.unionByName(part)
-            cand_rows = cand.distinct().limit(
-                cap * len(levels) + 1).collect()
+            cand_rows = self._collect_capped(
+                cand.distinct(), cap * len(levels) + 1)
 
         ents: list[dict] = []
         alive: list[bool] = []
@@ -9008,6 +9020,7 @@ class Engine:
 
         for r in cand_rows:
             register({c: r[c] for c in base_cols})
+        stored = [dict(e) for e in ents]  # candidates as read
 
         inserts = removed = 0
         inserted_rows: list[tuple] = []  # initial values (MySQL: the
@@ -9102,29 +9115,24 @@ class Engine:
                         + tuple(ents[eid][c] for c in base_cols)
                     )
 
-        # swap candidates out, live entity states in (the filter /
-        # anti-joins mirror candidate selection exactly — keys are
-        # static). Using the SAME predicate for fetch and removal
-        # guarantees no stored row is dropped without having been
-        # collected into ents first.
-        if anyhit is not None:
-            kept = base.filter(~anyhit)
-        else:
-            kept = base
-            for _iname, icols, nex in levels:
-                keys_df = df.select(*icols).distinct()
-                if nex:
-                    keys_df = keys_df.where(self._nonnull(icols))
-                kept = kept.join(keys_df, icols, "left_anti")
+        # row-level commit: a candidate that died or changed leaves by
+        # its position, and every changed or inserted live entity is
+        # written; an untouched candidate stays where it is
+        deletes: dict[str, list[int]] = {}
+        for eid, r in enumerate(cand_rows):
+            if not alive[eid] or ents[eid] != stored[eid]:
+                deletes.setdefault(r[FILE_COL], []).append(r[POS_COL])
         out_schema = T.StructType(
             [T.StructField(f.name, f.dataType, True)
              for f in base.schema.fields]
         )
-
         live = [tuple(e[c] for c in base_cols)
-                for e, a in zip(ents, alive) if a]
-        t.overwrite(kept.select(*base_cols).unionByName(
-            local_frame(self.spark, live, out_schema)))
+                for eid, (e, a) in enumerate(zip(ents, alive))
+                if a and (eid >= len(stored) or e != stored[eid])]
+        if live or deletes:
+            t.overwrite_pruned(
+                local_frame(self.spark, live, out_schema) if live else None,
+                deletes)
         ins_img = local_frame(self.spark, inserted_rows, out_schema) \
             if want_insert_image else None
         upd_pairs = None
@@ -10257,9 +10265,10 @@ class Engine:
             )
         if s.kind == "table_status":
             # SHOW TABLE STATUS (reference: GMS TestShowTableStatus).
-            # Rows/Data_length come from parquet footers — metadata
-            # reads, no Spark job.
-            import pyarrow.parquet as pq
+            # Rows/Data_length come from the log's live files (row
+            # counts recorded from parquet footers at commit) — no
+            # Spark job.
+            import datetime as _dt
 
             names = sorted(self.catalog.list_tables())
             if s.like:
@@ -10268,17 +10277,10 @@ class Engine:
             rows = []
             for n in names:
                 t = self.catalog.table(n)
-                snap = os.path.join(t.dir, f"v{t.version}")
-                n_rows, n_bytes = 0, 0
-                for f_ in sorted(os.listdir(snap)):
-                    p = os.path.join(snap, f_)
-                    if f_.endswith(".parquet"):
-                        n_rows += pq.ParquetFile(p).metadata.num_rows
-                        n_bytes += os.path.getsize(p)
+                n_rows, n_bytes = t.count(), t.data_bytes()
                 avg = n_bytes // n_rows if n_rows else 0
-                import datetime as _dt
-
-                ctime = _dt.datetime.fromtimestamp(os.path.getmtime(snap))
+                ctime = _dt.datetime.fromtimestamp(
+                    os.path.getmtime(os.path.join(t.dir, "_log")))
                 rows.append((
                     n, "parquet", 10, "Columnar", n_rows, avg, n_bytes,
                     None, ctime, "utf8mb4_0900_ai_ci", "",
@@ -10481,12 +10483,12 @@ class Engine:
             # the reference's __sys__.binlog_position store
             # (catalog/internal_tables.go:180-186; GTID saved in the same
             # commit, binlog_replica_applier.go:786-812). The position
-            # lives in each table's pointer, so this reads committed
+            # lives in each table's log, so this reads committed
             # state, never in-flight buffers.
             rows = []
             for name in self.catalog.list_tables():
-                ptr = self.catalog.table(name)._read_pointer()
-                for app_id, pos in sorted(ptr.get("txn", {}).items()):
+                marks = self.catalog.table(name).txn_marks()
+                for app_id, pos in sorted(marks.items()):
                     seg, off = divmod(int(pos), 1_000_000)
                     rows.append(
                         (name, app_id, int(pos), f"segment-{seg:06d}", off)
@@ -10617,8 +10619,8 @@ class Engine:
             rows = []
             seen = set()
             for name in self.catalog.list_tables():
-                ptr = self.catalog.table(name)._read_pointer()
-                for pos in ptr.get("txn", {}).values():
+                marks = self.catalog.table(name).txn_marks()
+                for pos in marks.values():
                     seg = int(pos) // 1_000_000
                     if seg not in seen:
                         seen.add(seg)
@@ -10644,8 +10646,8 @@ class Engine:
             # raw event payloads live with the feed, not the catalog)
             rows = []
             for name in self.catalog.list_tables():
-                ptr = self.catalog.table(name)._read_pointer()
-                for app, pos in ptr.get("txn", {}).items():
+                marks = self.catalog.table(name).txn_marks()
+                for app, pos in marks.items():
                     rows.append(
                         (f"segment-{int(pos) // 1_000_000:06d}",
                          int(pos), "Table_map", 1, int(pos),

@@ -65,7 +65,7 @@ def exact_incremental(
         new_fps = (
             tagged.select("fp").distinct().join(store, "fp", "left_anti")
         )
-        catalog.table(store_name).overwrite(store.unionByName(new_fps))
+        catalog.table(store_name).append(new_fps)
     return survivors
 
 
@@ -114,7 +114,7 @@ def minhash_incremental(
         add = bands.select("band", "band_sig").distinct().join(
             store, ["band", "band_sig"], "left_anti"
         )
-        catalog.table(store_name).overwrite(store.unionByName(add))
+        catalog.table(store_name).append(add)
     return survivors
 
 
@@ -165,5 +165,5 @@ def span_incremental(
             .distinct()
             .join(store, "span_hash", "left_anti")
         )
-        catalog.table(store_name).overwrite(store.unionByName(new_spans))
+        catalog.table(store_name).append(new_spans)
     return survivors

@@ -91,8 +91,8 @@ def semantic_map(
     fresh = misses.mapInPandas(infer, _CACHE_SCHEMA)
 
     if catalog is not None:
-        new_rows = fresh  # materialized by the overwrite below
-        catalog.table(cache_name).overwrite(cached.unionByName(new_rows))
+        # materialized by the append
+        catalog.table(cache_name).append(fresh)
         answers = catalog.table(cache_name).read()
     else:
         answers = fresh

@@ -156,8 +156,8 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One replication flush spanning TWO tables committed as ONE
     atomic catalog transaction (Catalog.merge_batch_multi: prepared
-    snapshots + a redo-journaled N-pointer swap — the reference applies
-    a whole flush in a single DuckDB transaction,
+    snapshots + a redo-journaled commit of N log entries — the
+    reference applies a whole flush in a single DuckDB transaction,
     delta/controller.go:75-190, position included,
     binlog_replica_applier.go:786-812).
 

@@ -76,7 +76,7 @@ PRIORITY: tuple[str, ...] = (
     "f_date_suite", "f_json_table_siblings", "pg_regex_casts",
     # CDC operators (§2.C): apply covers condense's semantics inline;
     # condense itself stays covered via suite_engine. multi_table is
-    # the round-6 atomic N-pointer commit (both-or-neither + dedupe).
+    # the atomic N-table commit (both-or-neither + dedupe).
     "cdc_multi_table", "cdc_apply",
     # engine statement front door under the gate: MERGE directly, the
     # CTAS/INSERT/REPLACE/IGNORE/UPDATE/DELETE/DDL/PREPARE family via

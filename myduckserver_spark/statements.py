@@ -558,6 +558,9 @@ class CreateTable:
     columns: list[tuple[str, str]]  # (name, mysql_type)
     meta: TableMeta
     if_not_exists: bool = False
+    # CREATE TABLE t (<columns>) AS <query>: rows to load after
+    # creating the declared table
+    query: str | None = None
 
 
 @dataclass
@@ -2080,6 +2083,30 @@ def parse_statement(sql: str, hash_comments: bool = True):
             unquote_ident(m.group(2)), unquote_ident(m.group(3)),
             if_not_exists=bool(m.group(1)),
         )
+
+    # CREATE TABLE t (<columns, keys>) [options] [AS] <query>: the
+    # declared table plus the query to load into it. The plain column-
+    # list capture below would otherwise swallow the query up to its
+    # last parenthesis and drop it.
+    m = re.match(r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
+                 r"(?:`[^`]+`|\w+)\s*\(", s, re.I)
+    if m:
+        mask, depth = mask_strings(s), 0
+        for close in range(m.end() - 1, len(s)):
+            depth += {"(": 1, ")": -1}.get(mask[close], 0)
+            if depth == 0:
+                break
+        q = re.search(r"(?:\bAS\s+)?(?=(?:\(\s*)*"
+                      r"(?:SELECT|WITH|VALUES|TABLE)\b)",
+                      mask[close + 1:], re.I)
+        # only table options (no parentheses, unlike a partition
+        # clause's VALUES LESS THAN (...)) may sit before the query
+        if q and "(" not in mask[close + 1: close + 1 + q.start()]:
+            ct = parse_statement(s[: close + 1 + q.start()].rstrip(),
+                                 hash_comments)
+            if isinstance(ct, CreateTable):
+                ct.query = s[close + 1 + q.end():].strip()
+                return ct
 
     # Strip a trailing partition clause FIRST: the column-list capture
     # below is greedy and would swallow the clause's parentheses.

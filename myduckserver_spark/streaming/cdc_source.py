@@ -15,7 +15,7 @@ with the reason taxonomy of delta/flush_reason.go:5-24):
   time tick, query barrier (read-your-writes), init, and close.
 - Exactly-once: each flush calls ``ParquetTable.merge_batch`` with
   ``txn_version = position of the last buffered event``; the position
-  is persisted in the SAME pointer commit as the data
+  is persisted in the SAME log entry as the data
   (catalog.py overwrite) — the Spark form of saving the GTID inside the
   replication transaction (binlog_replica_applier.go:786-812). A
   restarted applier reads the committed position back and skips applied
@@ -421,7 +421,7 @@ class CdcApplier:
         df = events_frame(self.spark, self.payload_schema, self._buffer)
         # Feeds with richer resume state than one scalar (a partitioned
         # log's per-partition offsets) expose state_at(position); it
-        # commits in the SAME pointer write as the data + position.
+        # commits in the SAME log entry as the data + position.
         state_at = getattr(self.feed, "state_at", None)
         applied = self.table.merge_batch(
             df, self.pk_cols, txn_app_id=self.app_id, txn_version=position,

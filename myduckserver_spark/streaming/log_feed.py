@@ -19,8 +19,8 @@ sandbox allows:
   positions (the GTID/file-pos analog), so the adapter assigns each
   emitted record a dense virtual position and exposes
   ``state_at(position)`` — the per-partition offset vector as of that
-  emission — which the applier commits in the SAME atomic pointer
-  write as the data (catalog.overwrite ``txn_state``). A restarted
+  emission — which the applier commits in the SAME log entry as the
+  data (catalog.overwrite ``txn_state``). A restarted
   adapter resumes from the committed vector; re-delivered records
   dedupe on the scalar position exactly as with ``FileCdcFeed``.
 
@@ -176,7 +176,7 @@ class LogFeedCdcSource:
     positions; ``state_at(position)`` returns the per-partition offset
     vector as of that emission, which CdcApplier commits atomically
     with the data (txn_state). Cold resume reads the committed vector
-    back from the table pointer."""
+    back from the table's log."""
 
     def __init__(self, log: PartitionedLogFeed, table, app_id: str):
         self.log = log
@@ -298,7 +298,7 @@ def start_multi_table_log_cdc_stream(
     """Structured-Streaming twin of ``MultiTableCdcApplier``: one
     micro-batch may carry rows for N tables (records name their table);
     every table's delta commits through ``Catalog.merge_batch_multi``
-    as ONE journaled pointer-swap transaction keyed by the epoch id —
+    as ONE journaled multi-table transaction keyed by the epoch id —
     both-or-neither across crash, checkpointed epochs re-deliver as
     no-ops. ``tables`` maps table name → (pk_cols, payload_schema);
     schemas may differ per table (the JSON source parses ``row`` into

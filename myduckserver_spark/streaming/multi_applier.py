@@ -1,14 +1,15 @@
 """Atomic multi-table CDC apply: one source transaction touching N
-tables commits as ONE catalog pointer-swap transaction.
+tables commits as ONE catalog transaction of N log entries.
 
 The reference applies a whole replication flush — every table's delta
 AND the replication position — inside a single DuckDB transaction
 (delta/controller.go:75-190; binlog_replica_applier.go:786-812 commits
 the binlog position in the same tx as the data). The Spark-side
-realization is redo-journaled pointer swapping: each table's next
-snapshot is PREPARED (data files written, pointer untouched), then one
-journal record — the commit point, an atomic rename — carries all N
-new pointer metas plus the (app_id, position, feed-state) markers;
+realization is a redo journal over the per-table logs: each table's
+next version is PREPARED (data files written, log entry not yet
+created), then one journal record — the commit point, an atomic
+rename — carries all N entries plus the (app_id, position,
+feed-state) markers;
 ``Catalog._recover_multi_txns`` rolls a torn apply forward on the next
 open. At every observable version the tables move both-or-neither.
 
@@ -20,7 +21,7 @@ any trigger), and a flush groups the buffer by table and commits via
 
 Scale: each table's condense+merge is the same one-shuffle-per-table
 plan as the single-table applier; the atomic step adds only O(N)
-driver-side pointer writes, no extra Spark jobs.
+driver-side log-entry writes, no extra Spark jobs.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Atomic multi-table CDC transactions: one source txn touching N
-tables commits as ONE journaled catalog pointer swap — both-or-neither
+tables commits as ONE journaled set of log entries — both-or-neither
 across crash at every observable version (reference applies a whole
 flush in one DuckDB transaction, delta/controller.go:75-190, with the
 replication position in the same commit,
@@ -75,7 +75,7 @@ def test_multi_commit_applies_both(spark, tmp_path):
 def test_crash_before_commit_point_changes_nothing(spark, tmp_path,
                                                    monkeypatch):
     """Kill during snapshot preparation (before the journal record):
-    NEITHER pointer moves; restart sees only the old versions."""
+    NEITHER log advances; restart sees only the old versions."""
     cat, a, b = _mk(spark, tmp_path)
     va, vb = a.version, b.version
 
@@ -100,20 +100,20 @@ def test_crash_before_commit_point_changes_nothing(spark, tmp_path,
 
 def test_crash_between_pointer_writes_rolls_forward(spark, tmp_path,
                                                     monkeypatch):
-    """Kill AFTER the journal record but between the two pointer
+    """Kill AFTER the journal record but between the two log-entry
     writes: the journal is the commit point, so restart recovery
     completes the transaction — BOTH tables show the new version."""
     cat, a, b = _mk(spark, tmp_path)
     calls = {"n": 0}
-    orig = ParquetTable._write_pointer
+    orig = ParquetTable.commit
 
-    def torn(self, meta):
+    def torn(self, entry):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("kill -9 mid-apply")
-        orig(self, meta)
+        return orig(self, entry)
 
-    monkeypatch.setattr(ParquetTable, "_write_pointer", torn)
+    monkeypatch.setattr(ParquetTable, "commit", torn)
     with pytest.raises(RuntimeError):
         cat.merge_batch_multi(
             [("acct", _delta(spark, [(1, 11.0)]), ["id"]),
@@ -121,7 +121,7 @@ def test_crash_between_pointer_writes_rolls_forward(spark, tmp_path,
             txn_app_id="repl", txn_version=5,
         )
     monkeypatch.undo()
-    # torn state on disk: exactly one pointer flipped
+    # torn state on disk: exactly one log advanced
     flipped = [t for t in (cat.table("acct"), cat.table("audit_log"))
                if t.last_txn_version("repl") == 5]
     assert len(flipped) == 1
@@ -264,9 +264,9 @@ def test_multi_table_streaming_cdc(spark, tmp_path):
 
 
 def test_vacuum_reclaims_prepared_orphans(spark, tmp_path, monkeypatch):
-    """A crash BEFORE the journal record leaves prepared v{N} dirs the
-    pointer never references; VACUUM reclaims them (and reads never
-    see them)."""
+    """A crash BEFORE the journal record leaves prepared data dirs no
+    log entry references; VACUUM reclaims them (and reads never see
+    them)."""
     import os
 
     cat, a, b = _mk(spark, tmp_path)
@@ -283,8 +283,10 @@ def test_vacuum_reclaims_prepared_orphans(spark, tmp_path, monkeypatch):
         )
     monkeypatch.undo()
     t = cat.table("acct")
-    orphan = os.path.join(t.dir, f"v{t.version + 1}")
-    assert os.path.isdir(orphan)  # prepared, never committed
+    live = {p.split(os.sep)[0] for p in t.live_files()}
+    orphan = [os.path.join(t.dir, d) for d in os.listdir(t.dir)
+              if d.startswith("d") and d not in live]
+    assert orphan and all(map(os.path.isdir, orphan))  # never committed
     assert t.vacuum(keep_last=5) >= 1
-    assert not os.path.exists(orphan)
+    assert not any(map(os.path.exists, orphan))
     assert _state(t) == [(1, 10.0), (2, 20.0)]  # committed state intact

@@ -8,7 +8,6 @@ the per-file statistics are disjoint enough to skip files.
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pyarrow.parquet as pq
@@ -18,12 +17,10 @@ from pyspark.sql import functions as F
 from myduckserver_spark.catalog import Catalog
 
 
-def _file_ranges(table_dir: str, version: int, col: str):
-    """[(min, max)] of `col` per parquet file, from footer stats."""
+def _file_ranges(t, col: str):
+    """[(min, max)] of `col` per live parquet file, from footer stats."""
     out = []
-    for path in sorted(
-        glob.glob(os.path.join(table_dir, f"v{version}", "*.parquet"))
-    ):
+    for path in [os.path.join(t.dir, p) for p in t.live_files()]:
         md = pq.ParquetFile(path).metadata
         idx = md.schema.names.index(col)
         lo, hi = None, None
@@ -51,7 +48,7 @@ def test_linear_optimize_disjoint_file_ranges(spark, cat):
     # bytes-based write sizing would coalesce this tiny table to 1 file
     t = cat.table("opt_lin")
     t.overwrite(df.repartition(8), sized=False)
-    before = _file_ranges(t.dir, t.version, "v")
+    before = _file_ranges(t, "v")
     assert len(before) > 1
     overlap_before = sum(
         1
@@ -62,7 +59,7 @@ def test_linear_optimize_disjoint_file_ranges(spark, cat):
     assert overlap_before > 0, "fixture not overlapping; test is vacuous"
 
     cat.optimize_table("opt_lin", ["v"], target_files=8)
-    after = _file_ranges(t.dir, t.version, "v")
+    after = _file_ranges(t, "v")
     assert len(after) > 1
     # every pair of files disjoint on v → a point read touches 1 file
     for i, (lo, hi) in enumerate(after):
@@ -84,8 +81,8 @@ def test_zorder_localizes_both_columns(spark, cat):
     t = cat.create_table("opt_z", df.repartition(8))
     cat.optimize_table("opt_z", ["x", "y"], zorder=True, target_files=16)
 
-    rx = _file_ranges(t.dir, t.version, "x")
-    ry = _file_ranges(t.dir, t.version, "y")
+    rx = _file_ranges(t, "x")
+    ry = _file_ranges(t, "y")
     assert len(rx) >= 8
     full_area = 200 * 200
     areas = [
@@ -110,26 +107,32 @@ def test_optimize_is_a_new_snapshot(spark, cat):
 
 
 def test_vacuum_retention(spark, tmp_path):
-    """VACUUM t [RETAIN n VERSIONS]: old snapshot dirs removed, the
-    committed snapshot (and N-1 predecessors) survive."""
+    """VACUUM t [RETAIN n VERSIONS]: data files no retained version
+    references are removed; the committed version's files (and those
+    of its N-1 predecessors) survive."""
     import os
 
     from myduckserver_spark.engine import Engine
 
     e = Engine(spark, str(tmp_path / "wh_vac"))
     e.execute("CREATE TABLE v (id INT PRIMARY KEY, x DOUBLE)")
-    for i in range(4):
-        e.execute(f"INSERT INTO v (id, x) VALUES ({i}, {i}.5)")
+    e.execute("INSERT INTO v (id, x) VALUES (0, 0.5), (1, 1.5), (2, 2.5), "
+              "(3, 3.5)")
+    # each UPDATE touches every row, so it replaces the one live file
+    for _ in range(4):
+        e.execute("UPDATE v SET x = x + 1")
     t = e.catalog.table("v")
-    vdirs = lambda: sorted(d for d in os.listdir(t.dir) if d.startswith("v"))
-    assert len(vdirs()) == 5  # v0..v4
+    ddirs = lambda: sorted(d for d in os.listdir(t.dir) if d.startswith("d"))
+    vdir = lambda v: {p.split(os.sep)[0] for p in t.live_files(v)}
+    assert len(ddirs()) == 5  # the INSERT's and four UPDATEs' files
     r = e.execute("VACUUM v RETAIN 2 VERSIONS")
     assert r.affected_rows == 3
-    assert vdirs() == [f"v{t.version - 1}", f"v{t.version}"]
+    assert ddirs() == sorted(vdir(t.version - 1) | vdir(t.version))
+    assert len(ddirs()) == 2
     # table still reads fine; full vacuum keeps only the committed one
     assert e.sql("SELECT count(*) AS n FROM v").collect()[0].n == 4
     e.execute("VACUUM v")
-    assert vdirs() == [f"v{t.version}"]
+    assert ddirs() == sorted(vdir(t.version))
     assert e.sql("SELECT count(*) AS n FROM v").collect()[0].n == 4
 
 
@@ -163,19 +166,16 @@ def test_snapshot_write_sizing(spark, cat):
     """Bytes-based write sizing (r10): a small snapshot coalesces to
     one file regardless of upstream partitioning; sized=False (the
     OPTIMIZE/Z-order layout path) preserves the explicit partitioning."""
-    import glob
-    import os
-
     df = spark.range(0, 1000, 1, 8).selectExpr(
         "id AS k", "cast(id AS double) AS v"
     )
     t = cat.create_table("sz_small", df)
-    files = glob.glob(os.path.join(t.snapshot_dir(), "*.parquet"))
+    files = t.live_files()
     assert len(files) == 1, files
     assert t.read().count() == 1000
 
     t2 = cat.table("sz_explicit")
     t2.overwrite(df.repartition(8), sized=False)
-    files2 = glob.glob(os.path.join(t2.snapshot_dir(), "*.parquet"))
+    files2 = t2.live_files()
     assert len(files2) == 8, files2
     assert t2.read().count() == 1000

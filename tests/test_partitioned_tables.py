@@ -25,10 +25,20 @@ def peng(spark, tmp_path):
     return e
 
 
+def _region_dirs(t, version=None):
+    """Hive partition directories holding the version's live files."""
+    return {seg for p in t.live_files(version) for seg in p.split(os.sep)
+            if seg.startswith("region=")}
+
+
+def _inodes(t, version):
+    return {f: os.stat(os.path.join(t.dir, f)).st_ino
+            for f in t.live_files(version)}
+
+
 def test_partition_directories_on_disk(peng):
     t = peng.catalog.table("ev")
-    snap = os.path.join(t.dir, f"v{t.version}")
-    dirs = {d for d in os.listdir(snap) if d.startswith("region=")}
+    dirs = _region_dirs(t)
     assert dirs == {"region=eu", "region=us", "region=ap"}
 
 
@@ -53,8 +63,7 @@ def test_dml_preserves_partitioning(peng):
     peng.execute("UPDATE ev SET v = v + 10 WHERE region = 'us'")
     peng.execute("DELETE FROM ev WHERE region = 'ap'")
     t = peng.catalog.table("ev")
-    snap = os.path.join(t.dir, f"v{t.version}")
-    dirs = {d for d in os.listdir(snap) if d.startswith("region=")}
+    dirs = _region_dirs(t)
     assert dirs == {"region=eu", "region=us"}
     rows = {r.id: r.v for r in peng.execute("SELECT * FROM ev").collect()}
     assert rows == {1: 1.0, 2: 12.0, 3: 3.0}
@@ -94,8 +103,7 @@ def test_ctas_partitioned(peng):
         "SELECT * FROM ev WHERE v >= 1.0"
     )
     t = peng.catalog.table("ev2")
-    snap = os.path.join(t.dir, f"v{t.version}")
-    assert any(d.startswith("region=") for d in os.listdir(snap))
+    assert _region_dirs(t)
     df = peng.sql("SELECT id FROM ev2 WHERE region = 'eu'")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -105,8 +113,7 @@ def test_ctas_partitioned(peng):
 def test_optimize_preserves_partitioning(peng):
     peng.execute("OPTIMIZE ev")
     t = peng.catalog.table("ev")
-    snap = os.path.join(t.dir, f"v{t.version}")
-    assert any(d.startswith("region=") for d in os.listdir(snap))
+    assert _region_dirs(t)
     df = peng.sql("SELECT id FROM ev WHERE region = 'eu'")
     assert "PartitionFilters" in (
         df._jdf.queryExecution().executedPlan().toString()
@@ -115,28 +122,26 @@ def test_optimize_preserves_partitioning(peng):
 
 
 def test_update_pruned_rewrite_links_untouched_files(peng):
-    """A predicate-pruned UPDATE rewrites ONLY the files that hold
-    matching rows; every other data file is carried into the new
-    snapshot by hard link (same inode), not rewritten — the Delta-style
-    unchanged-AddFile reuse on the versioned-pointer layout."""
+    """A predicate-pruned UPDATE rewrites ONLY the rows that match;
+    every other data file stays live in the new version as the same
+    file (same inode), not rewritten — the Delta-style unchanged-
+    AddFile reuse."""
     t = peng.catalog.table("ev")
     v0 = t.version
-    before = {f: os.stat(os.path.join(t.snapshot_dir(v0), f)).st_ino
-              for f in t.data_files(v0)}
+    before = _inodes(t, v0)
     assert len(before) >= 3  # one file per region dir
     peng.execute("UPDATE ev SET v = v + 10 WHERE region = 'eu'")
     t = peng.catalog.table("ev")
     v1 = t.version
     assert v1 == v0 + 1
-    after = {f: os.stat(os.path.join(t.snapshot_dir(v1), f)).st_ino
-             for f in t.data_files(v1)}
+    after = _inodes(t, v1)
     carried = [f for f in after
                if f in before and after[f] == before[f]]
     rewritten = [f for f in after if f not in before]
-    # untouched partitions (us, ap) carried by link; eu rewritten
-    assert any(f.startswith("region=us") for f in carried)
-    assert any(f.startswith("region=ap") for f in carried)
-    assert all(f.startswith("region=eu") for f in rewritten)
+    # untouched partitions (us, ap) carried over; eu rewritten
+    assert any(f"{os.sep}region=us{os.sep}" in f for f in carried)
+    assert any(f"{os.sep}region=ap{os.sep}" in f for f in carried)
+    assert all(f"{os.sep}region=eu{os.sep}" in f for f in rewritten)
     assert len(rewritten) < len(before)
     # values correct
     rows = {r.id: r.v for r in
@@ -147,38 +152,35 @@ def test_update_pruned_rewrite_links_untouched_files(peng):
 def test_delete_pruned_rewrite(peng):
     t = peng.catalog.table("ev")
     v0 = t.version
-    before = {f: os.stat(os.path.join(t.snapshot_dir(v0), f)).st_ino
-              for f in t.data_files(v0)}
+    before = _inodes(t, v0)
     r = peng.execute("DELETE FROM ev WHERE region = 'us'")
     assert r.affected_rows == 1
     t = peng.catalog.table("ev")
-    after = {f: os.stat(os.path.join(t.snapshot_dir(t.version), f)).st_ino
-             for f in t.data_files(t.version)}
+    after = _inodes(t, t.version)
     carried = [f for f in after if f in before and after[f] == before[f]]
-    assert any(f.startswith("region=eu") for f in carried)
-    assert any(f.startswith("region=ap") for f in carried)
-    assert not any(f.startswith("region=us") for f in after)
+    assert any(f"{os.sep}region=eu{os.sep}" in f for f in carried)
+    assert any(f"{os.sep}region=ap{os.sep}" in f for f in carried)
+    assert not any(f"{os.sep}region=us{os.sep}" in f for f in after)
     assert sorted(
         r.id for r in peng.execute("SELECT id FROM ev").collect()
     ) == [1, 3, 4]
 
 
 def test_update_of_partition_column_falls_back_to_full_rewrite(peng):
-    """SET on a hive-partition column can move rows across partition
-    directories — the pruned path must not claim it."""
+    """SET on a hive-partition column moves rows across partition
+    directories: the moved row leaves its old file and is written
+    under its new partition directory."""
     peng.execute("UPDATE ev SET region = 'eu' WHERE id = 2")
     rows = {r.id: r.region for r in
             peng.execute("SELECT id, region FROM ev").collect()}
     assert rows[2] == "eu"
     t = peng.catalog.table("ev")
-    assert not any(
-        f.startswith("region=us") for f in t.data_files(t.version)
-    )
+    assert "region=us" not in _region_dirs(t)
 
 
 def test_vacuum_after_pruned_rewrite_keeps_linked_data(peng):
-    """VACUUM removes old version dirs; hard-linked files in the new
-    snapshot must survive (inode refcount keeps the data alive)."""
+    """VACUUM removes files only old versions reference; files the new
+    version still references must survive."""
     peng.execute("UPDATE ev SET v = v + 1 WHERE region = 'eu'")
     t = peng.catalog.table("ev")
     removed = t.vacuum(keep_last=1)

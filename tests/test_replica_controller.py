@@ -234,8 +234,8 @@ def test_replica_flush_does_not_shuffle_the_table(spark, tmp_path):
     feed.append(ACTION_INSERT, {"id": 10 ** 6, "v": 1.0}, table="big",
                 txn_seq=20)
     t = e.catalog.table("big")
-    table_bytes = sum(os.path.getsize(os.path.join(t.snapshot_dir(), f))
-                      for f in t.data_files())
+    table_bytes = sum(os.path.getsize(os.path.join(t.dir, f))
+                      for f in t.live_files())
     read = _shuffle_read(spark, "replica_flush", e.replica_poll)
     assert e.sql("SELECT COUNT(*) c FROM big").collect()[0].c == 50001
     assert e.sql("SELECT COUNT(*) c FROM big WHERE v = -1").collect()[0].c \
