@@ -270,7 +270,7 @@ def test_string_bit_inet_day_functions(spark):
 # | translate_test.go:42 newline in string    | test_passthrough_newlines_*    |
 # | translate_test.go:47 multiple statements  | engine.execute split (pytest)  |
 # | translate_test.go:70-92 1000 concurrent   | test_concurrent_translation_*  |
-# | converter_test.go quote normalize corpus  | not ported (no caller)         |
+# | converter_test.go quote normalize corpus  | test_converter.py (full port)  |
 # | (beyond reference: structural shapes an   | test_nested_* below            |
 # |  AST parser gets free — pinned here       |                                |
 # |  against the token lexer)                 |                                |
