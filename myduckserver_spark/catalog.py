@@ -38,8 +38,15 @@ Version N is entries 0..N replayed. A read scans the live files; only
 files that carry a deletion vector get a ``row_index`` mask, so a
 table without one reads as one plain parquet scan. Statements that
 touch a few rows commit row by row ("add these rows, delete these
-positions": ``overwrite_pruned``); every other writer commits "remove
-all live files + add" (``overwrite``). Rolling back appends an entry
+positions": ``overwrite_pruned``), and so does a replication flush
+whose events the applier holds on the driver (``merge_cdc``: the
+touched keys' positions are deleted, the net rows added as one file).
+Full rewrites ("remove all live files + add": ``overwrite``) stay for
+every other writer, and for a CDC flush whose delta is distributed (a
+foreachBatch micro-batch), whose columns do not carry the table's
+types, or that matches more than ``MAX_DV_ROWS`` stored rows of a
+table. A replicated TRUNCATE removes every live file with no data
+job (``truncate``). Rolling back appends an entry
 that restores an older version's file set; time travel replays the
 log to N; VACUUM deletes data files no retained version references.
 
@@ -64,6 +71,7 @@ import shutil
 import tempfile
 import urllib.parse
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import pyarrow.parquet as pq
@@ -71,8 +79,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from myduckserver_spark.frames import local_frame
-from myduckserver_spark.operators.cdc import apply_cdc
+from myduckserver_spark.frames import collect_capped, local_frame
+from myduckserver_spark.operators.cdc import (
+    ACTION_DELETE,
+    ACTION_INSERT,
+    HeldDelta,
+    apply_cdc,
+    key_canon,
+)
 
 # Snapshot writes target this many bytes per output file (guide-class
 # 128 MB-1 GB parquet sizing). The file count comes from Catalyst
@@ -111,6 +125,21 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
         return df
     want = -(-est // _TARGET_WRITE_FILE_BYTES)
     return df.coalesce(max(1, min(want, _MAX_WRITE_PARTITIONS)))
+
+
+def _unfetchable(dt: T.DataType) -> bool:
+    """Whether `dt` holds a type whose values PySpark cannot return
+    (``YearMonthIntervalType.fromInternal`` is not implemented), so a
+    stored column of it would fail every later SELECT *."""
+    if isinstance(dt, (T.YearMonthIntervalType, T.CalendarIntervalType)):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _unfetchable(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _unfetchable(dt.keyType) or _unfetchable(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_unfetchable(f_.dataType) for f_ in dt.fields)
+    return False
 
 
 class CommitConflictError(RuntimeError):
@@ -325,8 +354,10 @@ class ParquetTable:
                 groups.setdefault(root, []).append(p)
         scans = [scan(ps).select(*cols) for ps in groups.values()]
         for p, dv in sorted(st["dv"].items()):
-            scans.append(
-                scan([p]).where(~F.col("_metadata.row_index").isin(dv))
+            # one parsed predicate: Column.isin costs a Py4J round trip
+            # per position
+            scans.append(scan([p]).where(F.expr(
+                f"_metadata.row_index NOT IN ({','.join(map(str, dv))})"))
                 .select(*cols))
         if scans:
             return reduce(DataFrame.union, scans)
@@ -393,6 +424,14 @@ class ParquetTable:
                  "add": [], "remove": sorted(st["files"]) if replace else [],
                  "dv": {}}
         if df is not None:
+            for f_ in df.schema.fields if entry["schema"] is None or replace \
+                    else ():
+                if _unfetchable(f_.dataType):
+                    raise ValueError(
+                        f"column '{f_.name}' has type "
+                        f"{f_.dataType.simpleString()}, which cannot be "
+                        "returned to a client; store it as a number "
+                        "(e.g. months) instead")
             if parts:
                 missing = [c for c in parts if c not in df.columns]
                 if missing:
@@ -468,13 +507,19 @@ class ParquetTable:
         entry = self.prepare_snapshot(add, replace=False, deletes=deletes)
         for a in entry["add"]:
             a["delta"] = True  # counted by the compaction rule
-        v = self.commit(entry)
+        self.commit(entry)
+        return self.compact()
+
+    def compact(self) -> int:
+        """Apply the compaction rule (module docstring) to the live
+        state: fold when more than FOLD_FILES delta files or more than
+        MAX_DV_ROWS deleted positions are live. Returns the version."""
         st = self._state()
         delta = {p for p, f_ in st["files"].items() if f_.get("delta")}
         if (len(delta) > FOLD_FILES
                 or sum(len(d) for d in st["dv"].values()) > MAX_DV_ROWS):
-            v = self._fold(st, delta | set(st["dv"]))
-        return v
+            return self._fold(st, delta | set(st["dv"]))
+        return st["version"]
 
     def _fold(self, st: dict, paths: set[str]) -> int:
         """Rewrite the live rows of ``paths`` into fresh files that
@@ -501,6 +546,15 @@ class ParquetTable:
             return self.overwrite(union)
         return self.overwrite_pruned(df.select(*[
             F.col(f_.name).cast(f_.dataType) for f_ in base.schema.fields]))
+
+    def truncate(self, txn_app_id: str | None = None,
+                 txn_version: int | None = None,
+                 txn_state: dict | None = None) -> int:
+        """Commit an entry that removes every live file, keeping the
+        schema and partitioning; no Spark job runs. The txn mark rides
+        in the same entry (a replicated TRUNCATE)."""
+        return self.commit(self.prepare_snapshot(
+            None, txn_app_id, txn_version, txn_state))
 
     def restore(self, version: int) -> int:
         """Roll back by appending an entry that restores ``version``'s
@@ -636,13 +690,14 @@ class ParquetTable:
     # ----------------------------------------------------------------- CDC
     def merge_batch(
         self,
-        delta: DataFrame,
+        delta: DataFrame | HeldDelta,
         pk_cols: list[str],
         txn_app_id: str | None = None,
         txn_version: int | None = None,
         txn_state: dict | None = None,
     ) -> bool:
-        """Condense + apply one CDC batch; idempotent under txn markers.
+        """Condense + apply one CDC batch (see ``merge_cdc``);
+        idempotent under txn markers.
 
         Returns False (no-op) if this (app_id, version) was already
         applied — the exactly-once contract for foreachBatch retries.
@@ -653,10 +708,158 @@ class ParquetTable:
             and self.last_txn_version(txn_app_id) >= txn_version
         ):
             return False
-        new_snapshot = apply_cdc(self.read(), delta, pk_cols)
-        self.overwrite(new_snapshot, txn_app_id, txn_version, txn_state)
+        merge_cdc([(self, delta, pk_cols)], txn_app_id, txn_version,
+                  txn_state, lambda prepared: self.commit(prepared[self.name]))
         return True
 
+
+def _rows_fit(delta: HeldDelta, schema: T.StructType) -> bool:
+    """Whether the batch's columns carry the table's column types, so
+    its net rows can be added as they are."""
+    have = {f_.name: f_.dataType for f_ in delta.frame.schema.fields}
+    return all(have.get(f_.name) == f_.dataType for f_ in schema.fields)
+
+
+def merge_cdc(batches: list, txn_app_id: str | None,
+              txn_version: int | None, txn_state: dict | None,
+              commit) -> None:
+    """Apply one CDC flush to N tables and hand their prepared entries
+    to ``commit`` (``Catalog.commit_multi``, or one table's ``commit``).
+    ``batches`` holds (ParquetTable, delta, pk_cols).
+
+    A ``HeldDelta`` (condensed on the driver) commits row by row, the
+    reference's keyed DELETE of the touched keys plus INSERT of the net
+    rows (delta/controller.go:150-190, 377-496):
+    - ONE job collects the stored positions of every touched key of
+      every table: a positioned read broadcast-semi-joined with the
+      table's key set, tagged by table;
+    - meanwhile each table's net non-delete rows are written as one
+      delta file, on a small thread pool;
+    - each entry deletes those positions and adds that file, and after
+      the commit each table applies the compaction rule.
+    An insert-only batch skips the positions job (a plain append, as
+    union semantics want); a delete-only batch writes no file.
+
+    A table falls back to ``apply_cdc`` and a full rewrite when its
+    delta is distributed (a foreachBatch micro-batch), when its columns
+    do not carry the table's types, or when more than MAX_DV_ROWS of its
+    stored rows match (the positions are capped before they reach the
+    driver)."""
+    from myduckserver_spark.operators.cdc import batch_action_profiles
+
+    txn = (txn_app_id, txn_version, txn_state)
+    rows_level, rewrite = [], []
+    for t, d, pk in batches:
+        if isinstance(d, HeldDelta) and _rows_fit(d, t.read().schema):
+            rows_level.append((t, d, pk))
+        else:
+            rewrite.append((t, d, pk))
+    # one profile job for every distributed delta
+    dist = [(t.name, d) for t, d, _pk in rewrite
+            if not isinstance(d, HeldDelta)]
+    profiles = dict(zip([n for n, _d in dist],
+                        batch_action_profiles([d for _n, d in dist])))
+
+    def full(t, d, pk):
+        if isinstance(d, HeldDelta):
+            snap = apply_cdc(t.read(), d.frame, pk,
+                             pre_condensed=d.actions != {ACTION_INSERT},
+                             actions=set(d.actions))
+        else:
+            snap = apply_cdc(t.read(), d, pk, actions=profiles[t.name])
+        return t.prepare_snapshot(snap, *txn)
+
+    def write_rows(t, d):
+        cols = [f_.name for f_ in t.read().schema.fields]
+        add = d.frame.where(F.col("action") != ACTION_DELETE).select(*cols)
+        return t._write_files(add, t.version + 1,
+                              t._state()["partition_by"], True)
+
+    prepared: dict[str, dict] = {}
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        # the writes are independent (disjoint data dirs, entries
+        # deferred to ``commit``): overlap them with each other and with
+        # the positions job
+        writes = {t.name: pool.submit(write_rows, t, d)
+                  for t, d, _pk in rows_level
+                  if d.actions != {ACTION_DELETE}}
+        fulls = {t.name: pool.submit(full, t, d, pk)
+                 for t, d, pk in rewrite}
+        deletes, over = _touched_positions(rows_level)
+        added = {n: f.result() for n, f in writes.items()}
+        prepared.update((n, f.result()) for n, f in fulls.items())
+    for t, d, pk in rows_level:
+        files = added.get(t.name, [])
+        if t.name in over:
+            if files:  # never committed: not left for vacuum
+                shutil.rmtree(os.path.join(
+                    t.dir, files[0]["path"].split(os.sep, 1)[0]),
+                    ignore_errors=True)
+            prepared[t.name] = full(t, d, pk)
+            continue
+        entry = t.prepare_snapshot(None, *txn, replace=False,
+                                   deletes=deletes.get(t.name))
+        entry["add"] = [dict(a, delta=True) for a in files]
+        prepared[t.name] = entry
+    commit(prepared)
+    for t, _d, _pk in rows_level:
+        if t.name not in over:
+            t.compact()
+
+
+def _touched_positions(rows_level: list) -> tuple[dict, set]:
+    """(table name -> {FILE_COL value: positions}, names over the
+    MAX_DV_ROWS bound) for every stored row whose key a held delta
+    touches.
+
+    Tables keyed alike (same key columns and types) share one job: the
+    union of their positioned reads, each tagged with its table,
+    semi-joins ONE broadcast set of all their touched keys. A table
+    can then match a key that only another table's batch touches, so
+    the driver keeps a row only when its table touched its key. (Key
+    sets tagged by table would not share a broadcast: the optimizer
+    pushes the join into each branch of the union and narrows the
+    broadcast side to that branch's tag.)"""
+    groups: dict[tuple, list] = {}
+    for t, d, pk in rows_level:
+        if d.actions != {ACTION_INSERT} and d.keys:
+            schema = t.read().schema
+            sig = tuple(T.StructField(c, schema[c].dataType) for c in pk)
+            groups.setdefault(sig, []).append((t, d))
+    deletes: dict[str, dict] = {}
+    over: set[str] = set()
+    for sig, members in groups.items():
+        canon = key_canon(list(sig))
+        pk = [f_.name for f_ in sig]
+        wanted = [{canon(k) for k in d.keys} for _t, d in members]
+        keys = {}  # one stored value per canonical key
+        for _t, d in members:
+            keys.update((canon(k), k) for k in d.keys)
+        scans = [t.read(positioned=True).select(
+                     F.lit(tag).alias("__t"), *pk, FILE_COL, POS_COL)
+                 for tag, (t, _d) in enumerate(members)]
+        kf = local_frame(members[0][0].spark, list(keys.values()),
+                         T.StructType(list(sig)))
+        # over-matches are bounded by the shared key set, so the cap
+        # stays O(batch)
+        cap = len(members) * (MAX_DV_ROWS + 1 + len(keys))
+        rows = collect_capped(
+            reduce(DataFrame.union, scans)
+            .join(F.broadcast(kf), pk, "left_semi")
+            .select("__t", *pk, FILE_COL, POS_COL), cap)
+        if len(rows) >= cap:
+            over.update(t.name for t, _d in members)
+            continue
+        found: list[dict] = [{} for _ in members]
+        for r in rows:
+            tag = r[0]
+            if canon(r[1:-2]) in wanted[tag]:
+                found[tag].setdefault(r[-2], []).append(r[-1])
+        for (t, _d), dv in zip(members, found):
+            deletes[t.name] = dv
+            if sum(map(len, dv.values())) > MAX_DV_ROWS:
+                over.add(t.name)
+    return deletes, over
 
 
 class Catalog:
@@ -742,16 +945,16 @@ class Catalog:
 
     def merge_batch_multi(
         self,
-        batches: list[tuple[str, DataFrame, list[str]]],
+        batches: list[tuple[str, DataFrame | HeldDelta, list[str]]],
         txn_app_id: str | None = None,
         txn_version: int | None = None,
         txn_state: dict | None = None,
     ) -> bool:
-        """Condense + apply one CDC flush spanning N tables, committed
-        as ONE atomic transaction of N log entries (both-or-neither
-        across crash). Idempotent under (app_id, version) markers,
-        which land on every participating table; returns False on
-        re-delivery.
+        """Condense + apply one CDC flush spanning N tables (see
+        ``merge_cdc``), committed as ONE atomic transaction of N log
+        entries (both-or-neither across crash). Idempotent under
+        (app_id, version) markers, which land on every participating
+        table; returns False on re-delivery.
         """
         if (
             txn_app_id is not None
@@ -763,36 +966,8 @@ class Catalog:
             )
         ):
             return False
-        from concurrent.futures import ThreadPoolExecutor
-
-        from myduckserver_spark.operators.cdc import batch_action_profiles
-
-        # one validation job for ALL tables (tagged union of the
-        # deltas' action columns), not one profile aggregate per table
-        profiles = batch_action_profiles([d for _, d, _ in batches])
-
-        def prep(args):
-            (name, delta, pk_cols), prof = args
-            t = self.table(name)
-            snap = apply_cdc(t.read(), delta, pk_cols, actions=prof)
-            return name, t.prepare_snapshot(
-                snap, txn_app_id, txn_version, txn_state
-            )
-
-        # the N prepare writes are independent (disjoint data dirs,
-        # entries deferred to commit_multi) — overlap them so one
-        # table's write tail back-fills the other's (guide §2.6);
-        # sequential when there is only one.
-        if len(batches) == 1:
-            prepared = dict([prep((batches[0], profiles[0]))])
-        else:
-            with ThreadPoolExecutor(
-                max_workers=min(4, len(batches))
-            ) as pool:
-                prepared = dict(
-                    pool.map(prep, zip(batches, profiles))
-                )
-        self.commit_multi(prepared)
+        merge_cdc([(self.table(n), d, pk) for n, d, pk in batches],
+                  txn_app_id, txn_version, txn_state, self.commit_multi)
         return True
 
     def create_table(

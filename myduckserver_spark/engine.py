@@ -35,7 +35,7 @@ from myduckserver_spark.catalog import (
     Catalog,
     ParquetTable,
 )
-from myduckserver_spark.frames import local_frame
+from myduckserver_spark.frames import collect_capped, local_frame
 from myduckserver_spark.functions.mysql_compat import translate_mysql
 from myduckserver_spark.types import schema_from_mysql, spark_to_mysql
 
@@ -1014,7 +1014,10 @@ class Engine:
         user-visible). position: None=append, ""=FIRST, name=AFTER."""
         from myduckserver_spark.types import mysql_to_spark
 
-        dtype, _meta = mysql_to_spark(mysql_type)
+        try:
+            dtype, _meta = mysql_to_spark(mysql_type)
+        except ValueError as e:
+            raise ValueError(f"column '{col}': {e}") from None
         t = self.catalog.table(name)
         df = t.read().withColumn(col, F.lit(default).cast(dtype))
         if position is not None:
@@ -1583,7 +1586,7 @@ class Engine:
                        for f in matched.schema.fields[:-2]] != \
                 [(f.name, f.dataType) for f in schema.fields]:
             return None
-        rows = self._collect_capped(matched, MAX_DV_ROWS + 1)
+        rows = collect_capped(matched, MAX_DV_ROWS + 1)
         if len(rows) > MAX_DV_ROWS:
             return None
         deletes: dict[str, list[int]] = {}
@@ -4114,23 +4117,6 @@ class Engine:
     # like cursors; the cap is enforced BEFORE materialization via
     # limit(cap+1).
     _CHAIN_WALK_CAP = 100_000
-
-    def _collect_capped(self, df: DataFrame, cap: int) -> list:
-        """At most ``cap`` rows of ``df``, as ONE job over all of its
-        partitions. A plain ``limit().collect()`` scans one partition
-        first and then launches more jobs until it has ``cap`` rows,
-        which a selective scan of a table in several files never has."""
-        key = "spark.sql.limit.initialNumPartitions"
-        conf = self.spark.conf
-        old = conf.get(key, None)
-        conf.set(key, str((1 << 31) - 1))
-        try:
-            return df.limit(cap).collect()
-        finally:
-            if old is None:
-                conf.unset(key)
-            else:
-                conf.set(key, old)
 
     def _positioned_view(self, table: str) -> str:
         """A temp view over the table's live rows plus FILE_COL and
@@ -8986,7 +8972,7 @@ class Engine:
                     _reduce(lambda a, b: a | b, preds), F.lit(False))
         pos = t.read(positioned=True)
         if anyhit is not None:
-            cand_rows = self._collect_capped(
+            cand_rows = collect_capped(
                 pos.filter(anyhit), cap * len(levels) + 1)
         else:
             cand = None
@@ -8996,7 +8982,7 @@ class Engine:
                     keys_df = keys_df.where(self._nonnull(icols))
                 part = pos.join(keys_df, icols, "left_semi")
                 cand = part if cand is None else cand.unionByName(part)
-            cand_rows = self._collect_capped(
+            cand_rows = collect_capped(
                 cand.distinct(), cap * len(levels) + 1)
 
         ents: list[dict] = []

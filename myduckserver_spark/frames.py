@@ -1,8 +1,9 @@
-"""Driver-held rows as DataFrames.
+"""Driver-held rows as DataFrames, and bounded collects back.
 
 ``local_frame`` is the one way the package turns Python rows it already
 holds (a literal VALUES batch, upsert assignments, a CDC flush delta,
-SHOW/CHECK result rows) into a DataFrame.
+SHOW/CHECK result rows) into a DataFrame; ``collect_capped`` fetches at
+most N rows of a selective scan in one job.
 
 ``spark.createDataFrame(list)`` ships the rows as a pickled Python RDD:
 every job over it starts Python workers, and Catalyst cannot size it,
@@ -119,3 +120,23 @@ def local_frame(
             list(col) if fix is None else [fix(v) for v in col], type=af.type))
     table = pa.Table.from_arrays(arrays, schema=arrow_schema)
     return spark.createDataFrame(table, struct)
+
+
+def collect_capped(df: DataFrame, cap: int) -> list:
+    """At most ``cap`` rows of ``df``, as ONE job over all of its
+    partitions. A plain ``limit().collect()`` scans one partition
+    first and then launches more jobs until it has ``cap`` rows,
+    which a selective scan of a table in several files never has.
+    Sets a session conf for the duration of the call: call it from
+    the thread that owns the session, not from a pool thread."""
+    key = "spark.sql.limit.initialNumPartitions"
+    conf = df.sparkSession.conf
+    old = conf.get(key, None)
+    conf.set(key, str((1 << 31) - 1))
+    try:
+        return df.limit(cap).collect()
+    finally:
+        if old is None:
+            conf.unset(key)
+        else:
+            conf.set(key, old)

@@ -13,6 +13,15 @@ reference delta/controller.go:
   of MERGE (no Delta jar in this image; same result, and the shuffle
   is keyed on the PK only, which is the 100 TB-scale requirement).
 
+Where condense runs depends on where the delta lives. A replication
+applier holds its buffered events on the driver, so ``held_delta``
+condenses them there in one Python pass that also yields the action
+profile; the catalog then commits the flush row by row (the touched
+keys' stored positions are deleted, the net rows added as one file).
+A distributed delta (a ``cdc_stream`` / ``log_feed`` foreachBatch
+micro-batch) is condensed by ``condense`` — one shuffle on the PK —
+inside ``apply_cdc``, which returns the table's new full snapshot.
+
 Augmented delta schema (reference delta/delta.go:13-56): the base
 columns plus ``action TINYINT, txn_tag STRING, txn_server BINARY,
 txn_group STRING, txn_seq BIGINT, txn_stmt BIGINT``.
@@ -20,8 +29,15 @@ txn_group STRING, txn_seq BIGINT, txn_stmt BIGINT``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+import struct
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from myduckserver_spark.frames import local_frame
 
 ACTION_DELETE = 0
 ACTION_UPDATE = 1
@@ -131,6 +147,93 @@ def apply_cdc(
     kept = base.join(touched, pk_cols, "left_anti")
     upserts = net.filter(F.col("action") != ACTION_DELETE).select(*data_cols)
     return kept.unionByName(upserts)
+
+
+@dataclass(frozen=True)
+class HeldDelta:
+    """A CDC batch held on the driver and condensed there
+    (``held_delta``). ``frame`` holds the rows to apply in the augmented
+    schema: every event of an insert-only batch (the plain-append fast
+    path keeps union semantics, duplicates included), else one net
+    change per key. ``keys`` are the primary keys whose stored rows the
+    batch replaces or deletes (none for an insert-only batch);
+    ``actions`` is the batch's action profile."""
+
+    frame: DataFrame
+    keys: list
+    actions: frozenset
+
+
+_NAN = ("NaN",)  # NaN's key part: NaN groups with NaN, as in Spark
+
+
+def key_canon(fields: list[T.StructField]):
+    """Key tuple (values of ``fields``) -> its canonical form under
+    Spark's grouping and join equality: NaN = NaN, -0.0 = +0.0, FLOAT
+    compared at single precision, a TIMESTAMP as its instant (naive
+    values, as ``collect`` returns them, read in process-local time,
+    as ``toInternal`` reads them), binary and nested values hashable."""
+    parts = [_key_part(f_.dataType) for f_ in fields]
+    return lambda key: tuple(p(v) for p, v in zip(parts, key))
+
+
+def _key_part(dtype: T.DataType):
+    f32 = isinstance(dtype, T.FloatType)
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return lambda v: None if v is None else dtype.toInternal(v)
+
+    def canon(v):
+        if isinstance(v, float):
+            if math.isnan(v):
+                return _NAN
+            if f32 and math.isfinite(v):
+                try:
+                    v = struct.unpack("f", struct.pack("f", v))[0]
+                except OverflowError:
+                    v = math.copysign(math.inf, v)
+            return v + 0.0
+        if isinstance(v, (bytes, bytearray)):
+            return bytes(v)
+        if isinstance(v, (list, tuple)):
+            return tuple(canon(x) for x in v)
+        if isinstance(v, dict):
+            return tuple(sorted((canon(k), canon(x)) for k, x in v.items()))
+        return v
+
+    return canon
+
+
+def held_delta(spark: SparkSession, schema: T.StructType, rows: list,
+               pk_cols: list[str]) -> HeldDelta:
+    """Condense driver-held CDC rows (tuples in ``schema``, the
+    augmented schema) in one pass, the Python twin of ``condense``:
+    last writer wins per key, ordered by ``TXN_ORDER_COLS`` with NULL
+    lowest, as Spark orders the struct. Of two events with equal order
+    keys the later row wins, which is what replaying the rows one by
+    one gives (``condense`` leaves such a tie to its aggregate's
+    arrival order). The same pass takes the action profile, so no
+    profile job runs."""
+    names = schema.names
+    key_at = [names.index(c) for c in pk_cols]
+    canon = key_canon([schema[c] for c in pk_cols])
+    order_at = [names.index(c) for c in TXN_ORDER_COLS]
+    action_at = names.index("action")
+    net: dict = {}
+    actions = set()
+    for r in rows:
+        actions.add(r[action_at])
+        k = canon([r[i] for i in key_at])
+        o = tuple((r[i] is not None, r[i]) for i in order_at)
+        got = net.get(k)
+        if got is None or o >= got[0]:
+            net[k] = (o, r)
+    if actions == {ACTION_INSERT}:
+        keep, keys = rows, []
+    else:
+        keep = [r for _o, r in net.values()]
+        keys = [tuple(r[i] for i in key_at) for r in keep]
+    return HeldDelta(local_frame(spark, keep, schema), keys,
+                     frozenset(actions))
 
 
 def augment(

@@ -43,11 +43,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from myduckserver_spark.catalog import ParquetTable
-from myduckserver_spark.frames import local_frame
 from myduckserver_spark.operators.cdc import (
     ACTION_DELETE,
     ACTION_INSERT,
     ACTION_UPDATE,
+    HeldDelta,
+    held_delta,
 )
 
 # Flush reasons — names match reference delta/flush_reason.go:5-24.
@@ -301,12 +302,13 @@ def _json_caster(dtype: T.DataType, session_zone: dt.tzinfo | None):
     return None
 
 
-def events_frame(spark: SparkSession, payload_schema: T.StructType,
-                 events: list[CdcEvent]):
-    """The flush delta of `events`: each event's payload under
-    `payload_schema` plus the CDC columns ``merge_batch`` reads. JSON
-    text for temporal and decimal fields is cast to the field's type
-    the way Spark's CAST from string does (unparseable text → NULL)."""
+def events_delta(spark: SparkSession, payload_schema: T.StructType,
+                 events: list[CdcEvent], pk_cols: list[str]) -> HeldDelta:
+    """The flush delta of `events`, condensed on the driver
+    (``held_delta``): each event's payload under `payload_schema` plus
+    the CDC columns the merge reads. JSON text for temporal and
+    decimal fields is cast to the field's type the way Spark's CAST
+    from string does (unparseable text → NULL), before keys compare."""
     schema = T.StructType(list(payload_schema.fields) + _AUGMENTED_FIELDS)
     zone = None
     if any(isinstance(f.dataType, T.TimestampType) for f in payload_schema):
@@ -320,7 +322,7 @@ def events_frame(spark: SparkSession, payload_schema: T.StructType,
            ev.txn_stmt)
         for ev in events
     ]
-    return local_frame(spark, data, schema)
+    return held_delta(spark, schema, data, pk_cols)
 
 
 @dataclass
@@ -418,13 +420,14 @@ class CdcApplier:
         if not self._buffer:
             return None
         position = self._buffer[-1].position
-        df = events_frame(self.spark, self.payload_schema, self._buffer)
+        delta = events_delta(self.spark, self.payload_schema, self._buffer,
+                             self.pk_cols)
         # Feeds with richer resume state than one scalar (a partitioned
         # log's per-partition offsets) expose state_at(position); it
         # commits in the SAME log entry as the data + position.
         state_at = getattr(self.feed, "state_at", None)
         applied = self.table.merge_batch(
-            df, self.pk_cols, txn_app_id=self.app_id, txn_version=position,
+            delta, self.pk_cols, txn_app_id=self.app_id, txn_version=position,
             txn_state=state_at(position) if state_at else None,
         )
         result = FlushResult(
@@ -441,10 +444,9 @@ class CdcApplier:
         return result
 
     def _truncate(self, position: int) -> None:
-        empty = self.table.read().limit(0)
         state_at = getattr(self.feed, "state_at", None)
-        self.table.overwrite(
-            empty, txn_app_id=self.app_id, txn_version=position,
+        self.table.truncate(
+            txn_app_id=self.app_id, txn_version=position,
             txn_state=state_at(position) if state_at else None,
         )
         self.flush_log.append(

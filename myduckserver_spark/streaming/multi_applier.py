@@ -19,8 +19,9 @@ is global (the reference's delta controller also flushes ALL tables on
 any trigger), and a flush groups the buffer by table and commits via
 ``Catalog.merge_batch_multi``.
 
-Scale: each table's condense+merge is the same one-shuffle-per-table
-plan as the single-table applier; the atomic step adds only O(N)
+Scale: each table's events condense on the driver (``events_delta``),
+and the flush commits row by row: one positions job for all tables,
+one write of the net rows per table; the atomic step adds only O(N)
 driver-side log-entry writes, no extra Spark jobs.
 """
 
@@ -43,7 +44,7 @@ from myduckserver_spark.streaming.cdc_source import (
     FLUSH_TIME_TICK,
     CdcEvent,
     FlushResult,
-    events_frame,
+    events_delta,
 )
 
 
@@ -202,7 +203,8 @@ class MultiTableCdcApplier:
         state_at = getattr(self.feed, "state_at", None)
         applied = self.catalog.merge_batch_multi(
             [
-                (name, events_frame(self.spark, self.tables[name][1], evs),
+                (name, events_delta(self.spark, self.tables[name][1], evs,
+                                    self.tables[name][0]),
                  self.tables[name][0])
                 for name, evs in by_table.items()
             ],
@@ -224,12 +226,10 @@ class MultiTableCdcApplier:
         return result
 
     def _truncate(self, ev: CdcEvent) -> None:
-        name = self._table_of(ev)
-        t = self.catalog.table(name)
+        t = self.catalog.table(self._table_of(ev))
         state_at = getattr(self.feed, "state_at", None)
-        t.overwrite(
-            t.read().limit(0), txn_app_id=self.app_id,
-            txn_version=ev.position,
+        t.truncate(
+            txn_app_id=self.app_id, txn_version=ev.position,
             txn_state=state_at(ev.position) if state_at else None,
         )
         self.flush_log.append(FlushResult(FLUSH_DDL, 0, 0, ev.position, True))

@@ -162,7 +162,10 @@ def schema_from_mysql(columns: list[tuple[str, str]] | dict[str, str],
     not_null = not_null or set()
     fields = []
     for name, ts in columns:
-        dtype, meta = mysql_to_spark(ts)
+        try:
+            dtype, meta = mysql_to_spark(ts)
+        except ValueError as e:
+            raise ValueError(f"column '{name}': {e}") from None
         fields.append(
             T.StructField(name, dtype, nullable=name not in not_null, metadata=meta)
         )

@@ -115,3 +115,23 @@ def test_ctas_with_declared_keys_rejects_duplicate_rows(eng, src):
     assert r.affected_rows == 1
     assert [tuple(r) for r in eng.sql("SELECT * FROM d").collect()] \
         == [(1, None)]
+
+
+def test_year_month_interval_column_is_rejected_by_name(eng):
+    """A stored INTERVAL YEAR TO MONTH column could never be returned
+    (PySpark has no YearMonthIntervalType.fromInternal), so CREATE,
+    CTAS and ALTER ADD COLUMN refuse it, naming the column, and leave
+    no table behind; a DAY TO SECOND interval still round-trips."""
+    with pytest.raises(ValueError, match="column 'iv'"):
+        eng.execute("CREATE TABLE ym AS SELECT 1 AS id, "
+                    "INTERVAL '1-2' YEAR TO MONTH AS iv")
+    assert not eng.catalog.table("ym").exists()
+    with pytest.raises(ValueError, match="column 'iv'"):
+        eng.execute("CREATE TABLE ym2 (id INT, iv INTERVAL YEAR TO MONTH)")
+    eng.execute("CREATE TABLE t (id INT PRIMARY KEY)")
+    with pytest.raises(ValueError, match="column 'iv'"):
+        eng.execute("ALTER TABLE t ADD COLUMN iv INTERVAL YEAR TO MONTH")
+    assert eng.catalog.table("t").read().columns == ["id"]
+    eng.execute("CREATE TABLE dt AS SELECT 1 AS id, "
+                "INTERVAL '1 2' DAY TO HOUR AS iv")
+    assert len(eng.execute("SELECT * FROM dt").collect()) == 1
