@@ -730,9 +730,8 @@ def merge_cdc(batches: list, txn_app_id: str | None,
     A ``HeldDelta`` (condensed on the driver) commits row by row, the
     reference's keyed DELETE of the touched keys plus INSERT of the net
     rows (delta/controller.go:150-190, 377-496):
-    - ONE job collects the stored positions of every touched key of
-      every table: a positioned read broadcast-semi-joined with the
-      table's key set, tagged by table;
+    - one job collects the stored positions of every touched key of
+      every table keyed alike (``_touched_positions``);
     - meanwhile each table's net non-delete rows are written as one
       delta file, on a small thread pool;
     - each entry deletes those positions and adds that file, and after
